@@ -86,7 +86,7 @@ object Bench {
     // adjudicate contention instead of trusting the min
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},""" +
       passes.zipWithIndex.map { case (p, i) => s""""pass${i + 1}":${obj(p)}""" }.mkString(",") +
-      s""","load1":[${loads.mkString(",")}],"load1_prelaunch":$loadPre,""" +
+      s""","load1":[${loads.mkString(",")}],"load1_prelaunch":${"%.4f".formatLocal(java.util.Locale.ROOT, loadPre)},""" +
       s""""errors":$errs,"sf":"$sfDir"}"""
     println(json)
     // also land the line as a file: the driver's stdout capture tail-

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.BspLoop
+
 /** Bulk-synchronous iterative graph computation — the link-analysis
   * family a crawl-scale corpus pipeline runs to turn raw link structure
   * into a per-page/per-domain quality prior (Common Crawl publishes
@@ -20,16 +22,15 @@ import org.apache.spark.sql.functions._
   * reason tfidf/familiarity use scaled integers.)
   *
   * Scale shape (the part that matters at 100 TB of edges):
-  *  - Each iteration is ONE exchange (round 21): join ranks to edges on
-  *    `src` (edges ship with their out-degree attached, so the per-edge
+  *  - Each iteration is ONE exchange: join ranks to edges on `src`
+  *    (edges ship with their out-degree attached, so the per-edge
   *    contribution `rank DIV outdeg` needs no second lookup), then the
   *    per-edge contributions AND the per-node flag rows ride one union
   *    into one `groupBy(node).sum` — the sum is associative, so
   *    map-side partial aggregation absorbs in-degree skew (a celebrity
   *    page's million in-links combine to one partial per map task)
   *    before the exchange, and folding the node frame into the same
-  *    aggregate deletes the second per-step exchange the old
-  *    update-join paid.
+  *    aggregate means no second per-step exchange for an update join.
   *  - The edge table is joined to its degree table ONCE and
   *    `localCheckpoint`ed: it is re-read every iteration, and without
   *    the lineage cut each iteration would re-run the degree aggregate.
@@ -42,13 +43,14 @@ import org.apache.spark.sql.functions._
   *  - Dangling mass: nodes with no out-links would leak their rank;
   *    instead each iteration redistributes it uniformly. Dₖ is a
   *    bounded driver scalar observed on step k's own materialization
-  *    (`Dataset.observe` riding the localCheckpoint job — round 22)
-  *    and enters step k+1 as a literal, so the redistribution costs no
-  *    aggregate job, no broadcast and no cross join per iteration.
-  *  - Driver loops run under [[graft.core.BspLoop.pinned]] (round 22):
-  *    AQE off, shuffle width pinned to the width AQE chose when it
-  *    materialized the loop inputs — per-step plans are fixed-shape,
-  *    so AQE's per-exchange re-plan round trips are pure critical-path
+  *    (`Dataset.observe` riding the localCheckpoint job) and enters
+  *    step k+1 as a literal, so the redistribution costs no aggregate
+  *    job, no broadcast and no cross join per iteration.
+  *  - Every driver loop runs on [[BspLoop.iterate]]: AQE
+  *    off, shuffle width pinned to the width AQE chose when it
+  *    materialized the loop inputs, one step capture and one
+  *    materialization per step — per-step plans are fixed-shape, so
+  *    AQE's per-exchange re-plan round trips are pure critical-path
   *    latency inside the loop (see BspLoop's scaladoc for the
   *    100 TB-posture argument).
   */
@@ -141,7 +143,7 @@ object Graph {
     // reject it here — the census rides the materialization job as an
     // observed metric (BspLoop.checkpointObserved), not a second scan,
     // and costs nothing when no weight column is in play (w ≡ 1).
-    val (edgesDeg, Seq(badW)) = graft.core.BspLoop.checkpointObserved(
+    val (edgesDeg, Seq(badW)) = BspLoop.checkpointObserved(
       e.join(deg, "src"),
       count(when(col("w").isNull || col("w") <= 0L, 1)))
     weightCol.foreach { c =>
@@ -156,7 +158,7 @@ object Graph {
     // Every setup scalar (|S|, N) is observed on a materialization the
     // setup pays anyway — no dedicated count() jobs.
     val seedSet = seeds.map { sd =>
-      graft.core.BspLoop.checkpointObserved(
+      BspLoop.checkpointObserved(
         sd.select(col("node")).distinct()
           .join(nset, Seq("node"), "left_semi"), count(lit(1)))
     }
@@ -168,7 +170,7 @@ object Graph {
     val nodesF0 = nodes
       .join(deg.select(col("src").as("node"), lit(true).as("has_out")), Seq("node"), "left")
       .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
-    val (nodesF, Seq(n)) = graft.core.BspLoop.checkpointObserved(
+    val (nodesF, Seq(n)) = BspLoop.checkpointObserved(
       seedSet match {
         case Some((sd, _)) => nodesF0
           .join(sd.select(col("node"), lit(true).as("is_seed")), Seq("node"), "left")
@@ -186,11 +188,10 @@ object Graph {
     // on both the narrow and wide paths, exactly as before)
     val dmassMetric =
       coalesce(sum(when(!col("has_out"), col("rank_e9"))), lit(0L))
-    val (ranks0, Seq(dmass0)) = graft.core.BspLoop.checkpointObserved(
+    val (ranks0, Seq(dmass0)) = BspLoop.checkpointObserved(
       nodesF.select(col("node"),
         when(col("is_seed"), lit(Scale / nT)).otherwise(lit(0L)).as("rank_e9"),
         col("has_out"), col("is_seed")), dmassMetric)
-    var ranks = ranks0
     var dmass = dmass0
     // narrow: pure i64. wide: the two expressions that can overflow i64
     // (the in-edge contribution sum and the damped product) in
@@ -204,17 +205,13 @@ object Graph {
       expr("CAST((CAST(rank_e9 AS DECIMAL(38,0)) * w) DIV outdeg AS DECIMAL(38,0))")
     else expr("(rank_e9 * w) DIV outdeg")
     val cType = if (wide) "decimal(38,0)" else "bigint"
-    // Dₖ enters the update as a LITERAL (round 22): it is a bounded
-    // driver scalar already observed on step k's materialization, so
-    // the per-step dangling apparatus the r20/r21 code paid (one scalar
-    // aggregate over the rank frame + one 1-row broadcast + one cross
-    // join = one extra driver-synchronized job per iteration whenever
-    // the graph has any dangling node) is GONE — `dTerm` = Dₖ div |S|
-    // computed in Scala (floor division of non-negative longs ≡ SQL
-    // DIV) and inlined. Dₖ = 0 (closed graph) reduces term for term to
-    // the classic rule, so the old empty-dangling fast path is now just
-    // the same expression with dTerm = 0 — one code path, bit-identical
-    // results on both (GraphSpec pins them).
+    // Dₖ enters the update as a LITERAL: it is a bounded driver scalar
+    // already observed on step k's materialization, so the dangling
+    // redistribution needs no per-step aggregate, broadcast or cross
+    // join — `dTerm` = Dₖ div |S| is computed in Scala (floor division
+    // of non-negative longs ≡ SQL DIV) and inlined. Dₖ = 0 (closed
+    // graph) reduces term for term to the classic rule, so one code
+    // path serves both (GraphSpec pins them).
     def damped(dTerm: Long) = if (wide)
       expr(s"($dampingPct * (coalesce(s, CAST(0 AS DECIMAL(38,0))) + CAST(IF(is_seed, ${dTerm}L, 0L) AS DECIMAL(38,0)))) DIV 100")
     else
@@ -223,35 +220,28 @@ object Graph {
     // The per-node flag row and the per-edge contribution rows ride ONE
     // union into ONE groupBy(node) — sum(c) over the same integer
     // addends (the base leg's NULL c adds nothing; a no-inflow node
-    // sums to NULL exactly as the old left join produced), the static
-    // flags recovered by max over the single non-null flag row — so the
-    // old contrib-aggregate + nodes-left-join pair (two Exchanges, one
-    // of them re-shuffling the node frame EVERY step) collapses to one
-    // Exchange per step carrying the same bytes (guide §2.4: operations
-    // keyed the same way share one exchange). Bit-identical update:
-    // same addends, same integer fold, same NULL semantics.
+    // sums to NULL, which the update's coalesce reads as no inflow),
+    // the static flags recovered by max over the single non-null flag
+    // row — so each step pays one Exchange and never re-shuffles the
+    // node frame for a separate update join (guide §2.4: operations
+    // keyed the same way share one exchange).
     val baseLeg = nodesF.select(col("node"),
       lit(null).cast(cType).as("c"), col("has_out"), col("is_seed"))
-    graft.core.BspLoop.pinned(edges.sparkSession, edgesDeg, ranks) {
-      for (step <- 1 to iterations) {
-        val contribLeg = edgesDeg.join(ranks, col("src") === col("node"))
-          .select(col("dst").as("node"), cExpr.as("c"),
-            lit(null).cast("boolean").as("has_out"),
-            lit(null).cast("boolean").as("is_seed"))
-        val merged = baseLeg.unionByName(contribLeg)
-          .groupBy(col("node"))
-          .agg(sum(col("c")).as("s"), max(col("has_out")).as("has_out"),
-            max(col("is_seed")).as("is_seed"))
-        val updated = merged
-          .select(col("node"), (baseExpr + damped(dmass / nT)).as("rank_e9"),
-            col("has_out"), col("is_seed"))
-        graft.core.BspLoop.capture("pagerank", step, updated)
-        val (ck, obs) = graft.core.BspLoop.checkpointObserved(updated, dmassMetric)
-        ranks = ck
-        dmass = obs.head
-      }
-    }
-    ranks.select(col("node"), col("rank_e9"))
+    BspLoop.iterate("pagerank", ranks0, iterations, edgesDeg) { (ranks, _) =>
+      val contribLeg = edgesDeg.join(ranks, col("src") === col("node"))
+        .select(col("dst").as("node"), cExpr.as("c"),
+          lit(null).cast("boolean").as("has_out"),
+          lit(null).cast("boolean").as("is_seed"))
+      val merged = baseLeg.unionByName(contribLeg)
+        .groupBy(col("node"))
+        .agg(sum(col("c")).as("s"), max(col("has_out")).as("has_out"),
+          max(col("is_seed")).as("is_seed"))
+      val updated = merged
+        .select(col("node"), (baseExpr + damped(dmass / nT)).as("rank_e9"),
+          col("has_out"), col("is_seed"))
+      BspLoop.Step(updated, Seq(dmassMetric),
+        next = (ck, obs) => { dmass = obs.head; ck })
+    }.state.select(col("node"), col("rank_e9"))
   }
 
   /** Harmonic centrality, exact fixed-point form: for every node v,
@@ -462,6 +452,29 @@ object Graph {
         (col("da") * col("db")).as("pref_attach"))
   }
 
+  /** A settled pair set kept as a lazy UNION of already-materialized
+    * level frames, so a BFS-shaped step pays exactly one
+    * materialization job (its new level) instead of re-copying every
+    * settled pair once per step — a monolithic re-checkpoint costs
+    * O(Σ|ball| · depth) rewritten bytes and a second job per step. The
+    * union is collapsed back to one materialized frame every
+    * `CollapseEvery` legs: unbounded union legs grow the per-step plan
+    * linearly and measured SLOWER past ~4 legs (Catalyst planning per
+    * leg outweighs the avoided copy on overhead-dominated steps), so
+    * the settled set is re-copied depth/4 times instead of depth times
+    * while every step's plan stays bounded at 4 scan legs. */
+  private final class SettledUnion(first: DataFrame) {
+    private val CollapseEvery = 4
+    private var legs = 1
+    var frame: DataFrame = first
+
+    def add(level: DataFrame): Unit = {
+      frame = frame.unionByName(level)
+      legs += 1
+      if (legs >= CollapseEvery) { frame = frame.localCheckpoint(); legs = 1 }
+    }
+  }
+
   /** Shared multi-source directed BFS: one row per discovered
     * (origin, node, dist) pair over the induced subgraph, dist 0 (self)
     * through maxDist. The explicit-pair-state core of
@@ -474,61 +487,34 @@ object Graph {
       .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .distinct().localCheckpoint()
     // (origin, node, dist): shortest directed distance origin→node
-    // found. Per-LEVEL checkpointed frames (the betweennessBrandesPpm
-    // forward-sweep pattern): the settled set for the anti-join is a
-    // lazy UNION of already-materialized levels, so most steps pay
-    // exactly one materialization job (the new frontier) — the old
-    // monolithic `known.unionByName(frontier).localCheckpoint()`
-    // re-copied every previously-discovered pair once per step,
-    // O(Σ|ball| · maxDist) rewritten bytes and a second job per step.
-    // The union is COLLAPSED back to one materialized frame every
-    // `collapseEvery` levels: unbounded union legs grow the per-step
-    // plan linearly and measured SLOWER past ~4 legs (Catalyst
-    // planning + AQE orchestration per leg outweigh the avoided copy
-    // on overhead-dominated steps), so the hybrid re-copies the
-    // settled set maxDist/4 times instead of maxDist times while
-    // keeping every step's plan bounded at 4 scan legs.
-    val collapseEvery = 4
+    // found, one checkpointed frame per level
     val levels = scala.collection.mutable.ArrayBuffer(
       nset.select(col("node").as("origin"), col("node"), lit(0).as("dist"))
         .localCheckpoint())
-    var knownU = levels(0).select(col("origin"), col("node"))
-    var legs = 1
-    var frontier = levels(0)
-    var d = 0
-    var done = false
-    graft.core.BspLoop.pinned(e.sparkSession, e, levels(0)) {
-      while (d < maxDist && !done) {
-        d += 1
-        // Union-fold (guide §2.4): candidates and the settled set ride ONE
-        // groupBy(origin, node) — max(old) marks pairs already settled,
-        // the filter keeps exactly the old distinct-then-anti-join's
-        // output, and the step pays one Exchange instead of two (the
-        // distinct's and the anti-join's, which both shuffled the settled
-        // legs anyway).
-        val cand = frontier.join(e, frontier("node") === e("src"))
-          .select(col("origin"), e("dst").as("node"), lit(false).as("old"))
-        val frontierPre = knownU.select(col("origin"), col("node"), lit(true).as("old"))
-          .unionByName(cand)
-          .groupBy(col("origin"), col("node")).agg(max(col("old")).as("old"))
-          .filter(!col("old"))
-          .select(col("origin"), col("node"), lit(d).as("dist"))
-        graft.core.BspLoop.capture("bfs", d, frontierPre)
-        // empty frontier ⇒ every later step discovers nothing: BFS is
-        // monotone, so exiting at exhaustion returns exactly what the
-        // full maxDist budget would — callers may over-budget for free.
-        // The emptiness probe rides the checkpoint job (observed count).
-        val (fck, Seq(nFound)) = graft.core.BspLoop.checkpointObserved(
-          frontierPre, count(lit(1)))
-        frontier = fck
-        done = nFound == 0L
-        if (!done) {
-          levels += frontier
-          knownU = knownU.unionByName(frontier.select(col("origin"), col("node")))
-          legs += 1
-          if (legs >= collapseEvery) { knownU = knownU.localCheckpoint(); legs = 1 }
-        }
-      }
+    val known = new SettledUnion(levels(0).select(col("origin"), col("node")))
+    BspLoop.iterate("bfs", levels(0), maxDist, e) { (frontier, d) =>
+      // Union-fold (guide §2.4): candidates and the settled set ride ONE
+      // groupBy(origin, node) — max(old) marks pairs already settled,
+      // the filter keeps exactly the first-reach pairs a distinct plus
+      // anti-join would, and the step pays one Exchange instead of two.
+      val cand = frontier.join(e, frontier("node") === e("src"))
+        .select(col("origin"), e("dst").as("node"), lit(false).as("old"))
+      val frontierPre = known.frame.select(col("origin"), col("node"), lit(true).as("old"))
+        .unionByName(cand)
+        .groupBy(col("origin"), col("node")).agg(max(col("old")).as("old"))
+        .filter(!col("old"))
+        .select(col("origin"), col("node"), lit(d).as("dist"))
+      // empty frontier ⇒ every later step discovers nothing: BFS is
+      // monotone, so exiting at exhaustion returns exactly what the
+      // full maxDist budget would — callers may over-budget for free.
+      BspLoop.Step(frontierPre, Seq(count(lit(1))), done = _.head == 0L,
+        next = { (fresh, found) =>
+          if (found.head > 0L) {
+            levels += fresh
+            known.add(fresh.select(col("origin"), col("node")))
+          }
+          fresh
+        })
     }
     levels.reduce(_ unionByName _)
   }
@@ -564,29 +550,25 @@ object Graph {
       .join(nset.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .distinct().localCheckpoint()
-    var state = nset
+    val state0 = nset
       .select(col("node"), graft.functions.HllF.hllInit(col("node"), m).as("regs"))
       .withColumn("est", graft.functions.HllF.hllEstimate(col("regs")))
       .withColumn("h", lit(0.0))
       .localCheckpoint()
-    graft.core.BspLoop.pinned(e.sparkSession, e, state) {
-      for (d <- 1 to maxDist) {
-        val cur = state.select(col("node").as("sn"), col("regs"))
-        val unioned = e.join(cur, e("src") === col("sn"))
-          .select(col("dst").as("node"), col("regs"))
-          .unionByName(state.select(col("node"), col("regs")))
-          .groupBy(col("node"))
-          .agg(graft.functions.HllF.hllUnion(col("regs"), m).as("regs"))
-        state = unioned
-          .join(state.select(col("node"), col("est").as("prev_est"), col("h")), Seq("node"))
-          .withColumn("est", graft.functions.HllF.hllEstimate(col("regs")))
-          .select(col("node"), col("regs"), col("est"),
-            // estimates can jitter down a hair as registers fill; deltas clamp at 0
-            (col("h") + greatest(lit(0.0), (col("est") - col("prev_est")) / d)).as("h"))
-          .localCheckpoint()
-      }
-    }
-    state.select(col("node"), col("h").as("harmonic_approx"))
+    BspLoop.iterate("hyperball", state0, maxDist, e) { (state, d) =>
+      val cur = state.select(col("node").as("sn"), col("regs"))
+      val unioned = e.join(cur, e("src") === col("sn"))
+        .select(col("dst").as("node"), col("regs"))
+        .unionByName(state.select(col("node"), col("regs")))
+        .groupBy(col("node"))
+        .agg(graft.functions.HllF.hllUnion(col("regs"), m).as("regs"))
+      BspLoop.Step(unioned
+        .join(state.select(col("node"), col("est").as("prev_est"), col("h")), Seq("node"))
+        .withColumn("est", graft.functions.HllF.hllEstimate(col("regs")))
+        .select(col("node"), col("regs"), col("est"),
+          // estimates can jitter down a hair as registers fill; deltas clamp at 0
+          (col("h") + greatest(lit(0.0), (col("est") - col("prev_est")) / d)).as("h")))
+    }.state.select(col("node"), col("h").as("harmonic_approx"))
   }
 
   /** The neighborhood function at web scale — HyperANF (Boldi, Rosa &
@@ -621,26 +603,27 @@ object Graph {
       .join(nset.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .distinct().localCheckpoint()
-    var state = nset
+    val state0 = nset
       .select(col("node"), graft.functions.HllF.hllInit(col("node"), m).as("regs"))
       .withColumn("est", graft.functions.HllF.hllEstimate(col("regs")))
       .localCheckpoint()
-    val mass0 = state.agg(sum(col("est")).as("mass0"))
-    val steps = graft.core.BspLoop.pinned(e.sparkSession, e, state) {
-      (1 to maxDist).map { d =>
-        val cur = state.select(col("node").as("sn"), col("regs"))
-        state = e.join(cur, e("src") === col("sn"))
-          .select(col("dst").as("node"), col("regs"))
-          .unionByName(state.select(col("node"), col("regs")))
-          .groupBy(col("node"))
-          .agg(graft.functions.HllF.hllUnion(col("regs"), m).as("regs"))
-          .withColumn("est", graft.functions.HllF.hllEstimate(col("regs")))
-          .localCheckpoint()
-        state.agg(sum(col("est")).as("mass"))
-          .crossJoin(broadcast(mass0))
-          .select(lit(d.toLong).as("dist"),
-            greatest(lit(0.0), col("mass") - col("mass0")).as("pairs_approx"))
-      }
+    val mass0 = state0.agg(sum(col("est")).as("mass0"))
+    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    BspLoop.iterate("hyperanf", state0, maxDist, e) { (state, d) =>
+      val cur = state.select(col("node").as("sn"), col("regs"))
+      BspLoop.Step(e.join(cur, e("src") === col("sn"))
+        .select(col("dst").as("node"), col("regs"))
+        .unionByName(state.select(col("node"), col("regs")))
+        .groupBy(col("node"))
+        .agg(graft.functions.HllF.hllUnion(col("regs"), m).as("regs"))
+        .withColumn("est", graft.functions.HllF.hllEstimate(col("regs"))),
+        next = { (ck, _) =>
+          steps += ck.agg(sum(col("est")).as("mass"))
+            .crossJoin(broadcast(mass0))
+            .select(lit(d.toLong).as("dist"),
+              greatest(lit(0.0), col("mass") - col("mass0")).as("pairs_approx"))
+          ck
+        })
     }
     steps.reduce(_ unionByName _)
   }
@@ -683,23 +666,18 @@ object Graph {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
-    var labels = nodes.select(col("node"), col("node").as("component"))
+    val labels0 = nodes.select(col("node"), col("node").as("component"))
       .localCheckpoint()
-    var it = 0
-    var converged = false
-    graft.core.BspLoop.pinned(sym.sparkSession, sym, labels) {
-    while (it < iterations && !converged) {
-      it += 1
-      // labels only decrease, so a step with no strict decrease is the
-      // fixpoint and every later step is a no-op — exiting early
-      // returns exactly the budgeted result (generous budgets are free).
+    // labels only decrease, so a step with no strict decrease is the
+    // fixpoint and every later step is a no-op — exiting early returns
+    // exactly the budgeted result (generous budgets are free).
+    BspLoop.iterate("cc", labels0, iterations, sym) { (labels, _) =>
       // One union-fold per step (guide §2.4): the node's OWN label rides
       // as a marker row through the SAME min-merge aggregate the
       // neighbor labels fold through — min over the union IS
       // least(own, nbr_min), the previous value recovered from the
-      // single marker row for change detection — so the old
-      // groupBy-then-left-join pair (two Exchanges, one re-shuffling the
-      // label frame every step) collapses to one Exchange per step.
+      // single marker row for change detection — so one Exchange per
+      // step serves both the merge and the update.
       val nbr = sym.join(labels, sym("dst") === labels("node"))
         .select(sym("src").as("node"), col("component").as("cand"),
           lit(false).as("own"))
@@ -709,22 +687,15 @@ object Graph {
         .agg(min(col("cand")).as("component"),
           min(when(col("own"), col("cand"))).as("old"))
         // this operator does NOT induce-restrict `edges` (labels exist
-        // only for `nodes` — the old left join enforced that); a
-        // symmetrized edge whose src is outside the node set groups
-        // here without a marker row and must stay out of the label set
+        // only for `nodes`); a symmetrized edge whose src is outside the
+        // node set groups here without a marker row and must stay out
+        // of the label set
         .filter(col("old").isNotNull)
         .select(col("node"), col("component"),
           (col("component") < col("old")).as("chg"))
-      graft.core.BspLoop.capture("cc", it, nextPre)
-      // the convergence probe rides the checkpoint job (observed
-      // metric) instead of re-scanning the frame as a second job
-      val (next, Seq(nChg)) = graft.core.BspLoop.checkpointObserved(
-        nextPre, count(when(col("chg"), 1)))
-      converged = nChg == 0L
-      labels = next.select(col("node"), col("component"))
-    }
-    }
-    labels
+      BspLoop.Step(nextPre, Seq(count(when(col("chg"), 1))), done = _.head == 0L,
+        next = (ck, _) => ck.select(col("node"), col("component")))
+    }.state
   }
 
   /** Per-node core number (k-core decomposition) via iterated
@@ -760,32 +731,27 @@ object Graph {
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint()
-    var cur = nset
+    val cur0 = nset
       .join(undirectedDegree(und).select(col("n").as("node"), col("d")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("d"), lit(0L)).as("c"))
       .localCheckpoint()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("nn")).orderBy(col("c").desc)
-    var it = 0
-    var converged = false
-    graft.core.BspLoop.pinned(sym.sparkSession, sym, cur) {
-    while (it < iterations && !converged) {
-      it += 1
+    // The h-index sequence is pointwise non-increasing, so "no row
+    // decreased" IS the fixpoint and every later step is a no-op —
+    // early exit returns exactly what the full budget would.
+    BspLoop.iterate("kcore", cur0, iterations, sym) { (cur, _) =>
       // Union-fold (guide §2.4): the node's own value enters the
       // neighbor-value histogram as a ZERO-COUNT row. The cumulative
       // n_ge is a sum of counts, so a zero-count row changes no other
       // row's n_ge; its own h-candidate min(own_c, #neighbors ≥ own_c)
       // never exceeds the h-index (H = max over ALL thresholds t of
       // min(t, n≥t) — adding an evaluation point is sound); and an
-      // isolated node's only row is (own_c, 0) ⇒ h = min(own_c, 0) = 0,
-      // reproducing the old coalesce(h, 0). The previous value for
-      // change detection rides out of the same aggregate via the
-      // zero-count marker — the old per-step cur-side left join and its
-      // Exchange are gone. The h-index sequence is pointwise
-      // non-increasing, so "no row decreased" IS the fixpoint and every
-      // later step is a no-op — early exit returns exactly what the
-      // full budget would.
+      // isolated node's only row is (own_c, 0) ⇒ h = min(own_c, 0) = 0.
+      // The previous value for change detection rides out of the same
+      // aggregate via the zero-count marker, so the step needs no
+      // cur-side join.
       val nbrVals = sym.join(cur, sym("dst") === cur("node"))
         .select(sym("src").as("nn"), col("c"), lit(1L).as("v"))
       val ownVal = cur.select(col("node").as("nn"), col("c"), lit(0L).as("v"))
@@ -799,14 +765,9 @@ object Graph {
           max(when(col("has_own"), col("c"))).as("own_c"))
         .select(col("nn").as("node"), col("h").as("c2"),
           (col("h") < col("own_c")).as("chg"))
-      graft.core.BspLoop.capture("kcore", it, nextPre)
-      val (next, Seq(nChg)) = graft.core.BspLoop.checkpointObserved(
-        nextPre, count(when(col("chg"), 1)))
-      converged = nChg == 0L
-      cur = next.select(col("node"), col("c2").as("c"))
-    }
-    }
-    cur.select(col("node"), col("c").as("coreness"))
+      BspLoop.Step(nextPre, Seq(count(when(col("chg"), 1))), done = _.head == 0L,
+        next = (ck, _) => ck.select(col("node"), col("c2").as("c")))
+    }.state.select(col("node"), col("c").as("coreness"))
   }
 
   /** Synchronous label propagation (Raghavan, Albert & Kumara 2007)
@@ -849,31 +810,25 @@ object Graph {
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint()
-    var labels = nset.select(col("node"), col("node").as("label"))
+    val labels0 = nset.select(col("node"), col("node").as("label"))
       .localCheckpoint()
-    graft.core.BspLoop.pinned(sym.sparkSession, sym, labels) {
-    for (step <- 1 to iterations) {
+    BspLoop.iterate("lpa", labels0, iterations, sym) { (labels, _) =>
       // Union-fold (guide §2.4): the node's own label enters the vote
       // census as a ZERO-WEIGHT row — sum(v) counts only real neighbor
       // votes, so collisions with a voted label leave its count
       // unchanged, the (cnt DESC, label ASC) argmax is untouched
       // whenever any real vote exists (0 < 1), and an isolated node's
       // only row is its own zero-weight label, reproducing the
-      // keep-own-label fallback — which deletes the old per-step
-      // labels-side left join and its Exchange.
+      // keep-own-label fallback with no labels-side join.
       val votes = sym.join(labels, sym("dst") === labels("node"))
         .select(sym("src").as("nn"), col("label"), lit(1L).as("v"))
       val own = labels.select(col("node").as("nn"), col("label"), lit(0L).as("v"))
-      val nextPre = own.unionByName(votes)
+      BspLoop.Step(own.unionByName(votes)
         .groupBy(col("nn"), col("label")).agg(sum(col("v")).as("cnt"))
         .groupBy(col("nn"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("nn").as("node"), (-col("m.nl")).as("label"))
-      graft.core.BspLoop.capture("lpa", step, nextPre)
-      labels = nextPre.localCheckpoint()
-    }
-    }
-    labels
+        .select(col("nn").as("node"), (-col("m.nl")).as("label")))
+    }.state
   }
 
   /** Multi-source weighted shortest distances over the DIRECTED induced
@@ -911,46 +866,38 @@ object Graph {
       .join(nset.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .localCheckpoint()
-    var dist = sources.select(col("node")).distinct()
+    val dist0 = sources.select(col("node")).distinct()
       .join(nset, Seq("node"), "left_semi")
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint()
-    var it = 0
-    var converged = false
-    graft.core.BspLoop.pinned(e.sparkSession, e, dist) {
-    while (it < maxIters && !converged) {
-      it += 1
+    val relax = BspLoop.iterate("sssp", dist0, maxIters, e) { (dist, _) =>
       val relaxed = e.join(dist, e("src") === dist("node"))
         .select(e("dst").as("node"), (col("dist") + col("w")).as("dist"),
           lit(false).as("old"))
       // the previous distance rides through the SAME min-merge aggregate
       // (each node appears at most once in `dist`, so min-over-old-rows
       // IS the previous value): change detection costs no extra join —
-      // one shuffle per step instead of two. The fixpoint probe rides
-      // the checkpoint job as an observed count: reached only grows,
-      // distances only fall, so any new node or any strict decrease =
-      // not yet converged; neither = fixpoint.
-      val (merged, Seq(nChg)) = graft.core.BspLoop.checkpointObserved(
+      // one shuffle per step. Reached only grows, distances only fall,
+      // so any new node or any strict decrease = not yet converged;
+      // neither = fixpoint.
+      BspLoop.Step(
         dist.withColumn("old", lit(true)).unionByName(relaxed)
           .groupBy(col("node")).agg(min(col("dist")).as("dist"),
             min(when(col("old"), col("dist"))).as("od")),
-        count(when(col("od").isNull || col("dist") < col("od"), 1)))
-      converged = nChg == 0L
-      dist = merged.select(col("node"), col("dist"))
+        Seq(count(when(col("od").isNull || col("dist") < col("od"), 1))),
+        done = _.head == 0L,
+        next = (merged, _) => merged.select(col("node"), col("dist")))
     }
-    if (!converged) {
-      // Budget exhausted with the last step still producing changes:
-      // the state may nonetheless be final (converged-at-exactly-H).
-      // One compare-only relaxation decides — no mutation, so a true
-      // fixpoint passes with maxIters = H instead of demanding H+1.
-      val relaxed = e.join(dist, e("src") === dist("node"))
-        .select(e("dst").as("node"), (col("dist") + col("w")).as("probe"))
-      converged = relaxed
-        .join(dist.select(col("node"), col("dist").as("od")), Seq("node"), "left")
-        .filter(col("od").isNull || col("probe") < col("od"))
-        .isEmpty
-    }
-    }
+    val dist = relax.state
+    // Budget exhausted with the last step still producing changes: the
+    // state may nonetheless be final (converged-at-exactly-H). One
+    // compare-only relaxation decides — no mutation, so a true fixpoint
+    // passes with maxIters = H instead of demanding H+1.
+    val converged = relax.stopped || e.join(dist, e("src") === dist("node"))
+      .select(e("dst").as("node"), (col("dist") + col("w")).as("probe"))
+      .join(dist.select(col("node"), col("dist").as("od")), Seq("node"), "left")
+      .filter(col("od").isNull || col("probe") < col("od"))
+      .isEmpty
     require(converged,
       s"shortest-path relaxation hit the $maxIters-step budget before its " +
         "fixpoint — distances would be non-minimal upper bounds; raise maxIters " +
@@ -1002,8 +949,8 @@ object Graph {
     *    min-label path the caller can argue (SCC diameter + condensation
     *    depth). A round exits as soon as a step changes nothing: labels
     *    only decrease, so each step marks rows whose (f, b) strictly
-    *    dropped and a `limit(1)`-style isEmpty probe over the
-    *    materialized frame detects the fixpoint — generous budgets
+    *    dropped and a count of them, observed on the step's own
+    *    materialization, detects the fixpoint — generous budgets
     *    cost nothing, and later rounds (small peeled subgraphs with
     *    small diameters) stop in a handful of steps. Early exit at the
     *    fixpoint returns the identical labeling the full budget would.
@@ -1018,8 +965,8 @@ object Graph {
                                   maxRounds: Int = 16): DataFrame = {
     require(propagationIters >= 1 && maxRounds >= 1)
     val nset = nodes.select(col("node"))
-    var (active, Seq(remaining0)) =
-      graft.core.BspLoop.checkpointObserved(nset, count(lit(1)))
+    var (active, Seq(remaining)) =
+      BspLoop.checkpointObserved(nset, count(lit(1)))
     val e = edges.select(col("src"), col("dst"))
       .join(nset.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi")
@@ -1033,28 +980,49 @@ object Graph {
       .localCheckpoint()
     // schema-polymorphic empty accumulator: same id type as `nodes`
     var assigned = nset.select(col("node"), col("node").as("scc_id")).limit(0)
-    var round = 0
-    var remaining = remaining0
-    graft.core.BspLoop.pinned(nodes.sparkSession, bi, active) {
-    while (remaining > 0) {
-      round += 1
-      require(round <= maxRounds,
-        s"SCC did not converge in $maxRounds rounds ($remaining nodes left) — " +
-          "raise maxRounds (long chain in the condensation DAG) or propagationIters")
-      var labels = active
-        .select(col("node"), col("node").as("f"), col("node").as("b"))
-        .localCheckpoint()
-      var step = 0
-      var converged = false
-      while (step < propagationIters && !converged) {
-        step += 1
+    def roundLabels() = active
+      .select(col("node"), col("node").as("f"), col("node").as("b"))
+      .localCheckpoint()
+    var round = 1
+    var roundStep = 0
+    // Closes a converged round: assigns every node with F = B, peels
+    // them from the active set and the edge list, and opens the next
+    // round's labels (or returns the final frame when none are left).
+    def peel(labels: DataFrame): DataFrame = {
+      val peeled = labels.filter(col("f") === col("b"))
+        .select(col("node"), col("f").as("scc_id"))
+      assigned = assigned.unionByName(peeled).localCheckpoint()
+      val (ack, Seq(nActive)) = BspLoop.checkpointObserved(
+        active.join(peeled.select("node"), Seq("node"), "left_anti"),
+        count(lit(1)))
+      active = ack
+      remaining = nActive
+      if (remaining == 0) labels
+      else {
+        round += 1
+        require(round <= maxRounds,
+          s"SCC did not converge in $maxRounds rounds ($remaining nodes left) — " +
+            "raise maxRounds (long chain in the condensation DAG) or propagationIters")
+        bi = bi.join(active.select(col("node").as("u")), Seq("u"), "left_semi")
+          .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
+          .localCheckpoint()
+        roundStep = 0
+        roundLabels()
+      }
+    }
+    // The rounds run flat on ONE chassis loop, so peeling shares the
+    // loop posture: every step is one propagation step, and the step
+    // that changes nothing closes its round with a peel. Both budgets
+    // fail loudly in the step's `next`, so the chassis budget itself
+    // never binds.
+    if (remaining > 0)
+      BspLoop.iterate("scc", roundLabels(), Int.MaxValue, bi) { (labels, _) =>
         // Union-fold (guide §2.4, the connectedComponentsMinLabel
         // pattern): the node's own (f, b) pair rides as a marker row
         // through the SAME min-merge aggregate as the direction-tagged
         // messages — min over the union IS least(own, incoming), the
         // previous pair recovered from the single marker row for change
-        // detection — deleting the old per-step labels-side left join
-        // and its Exchange.
+        // detection — so the step needs no labels-side join.
         val msgs = bi.join(labels, bi("u") === labels("node"))
           .select(col("v").as("node"),
             when(col("fw"), col("f")).as("mf"),
@@ -1068,33 +1036,20 @@ object Graph {
             min(when(col("own"), col("mb"))).as("ob"))
           .select(col("node"), col("f"), col("b"),
             (col("f") < col("of") || col("b") < col("ob")).as("chg"))
-        graft.core.BspLoop.capture("scc", step, nextPre)
-        val (next, Seq(nChg)) = graft.core.BspLoop.checkpointObserved(
-          nextPre, count(when(col("chg"), 1)))
-        labels = next
-        converged = nChg == 0L
+        BspLoop.Step(nextPre, Seq(count(when(col("chg"), 1))),
+          done = _ => remaining == 0, next = { (ck, nChg) =>
+            roundStep += 1
+            // an unconverged F/B frame could assign v to SCC(m) while
+            // the true SCC minimum m* < m hadn't propagated to v yet — a
+            // SPLIT component, silently wrong — so exactness demands the
+            // fixpoint
+            require(nChg.head == 0L || roundStep < propagationIters,
+              s"SCC propagation hit the $propagationIters-step budget before its " +
+                s"fixpoint (round $round) — raise propagationIters above the " +
+                "active subgraph's SCC diameter + condensation depth")
+            if (nChg.head > 0L) ck else peel(ck)
+          })
       }
-      // an unconverged F/B frame could assign v to SCC(m) while the
-      // true SCC minimum m* < m hadn't propagated to v yet — a SPLIT
-      // component, silently wrong — so exactness demands the fixpoint
-      require(converged,
-        s"SCC propagation hit the $propagationIters-step budget before its " +
-          s"fixpoint (round $round) — raise propagationIters above the " +
-          "active subgraph's SCC diameter + condensation depth")
-      val done = labels.filter(col("f") === col("b"))
-        .select(col("node"), col("f").as("scc_id"))
-      assigned = assigned.unionByName(done).localCheckpoint()
-      val (ack, Seq(nActive)) = graft.core.BspLoop.checkpointObserved(
-        active.join(done.select("node"), Seq("node"), "left_anti"),
-        count(lit(1)))
-      active = ack
-      remaining = nActive
-      if (remaining > 0)
-        bi = bi.join(active.select(col("node").as("u")), Seq("u"), "left_semi")
-          .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
-          .localCheckpoint()
-    }
-    }
     assigned
   }
 
@@ -1143,69 +1098,52 @@ object Graph {
     require(n > 0 && k > 0, "empty node or pivot set")
     // Per-LEVEL checkpointed frames, indexed by depth — the backward
     // sweep addresses levels directly instead of filtering a monolithic
-    // settled frame, and the settled set for the anti-join is a cheap
-    // union of the already-materialized leaves (never re-checkpointed:
-    // one materialization per level, not two).
+    // settled frame, and the settled set for the forward fold is a
+    // [[SettledUnion]] of them.
     val levelFrames = scala.collection.mutable.ArrayBuffer(
       p0.select(col("node").as("pivot"), col("node"), lit(1L).as("sigma"))
         .localCheckpoint())
-    var settledU = levelFrames(0).select(col("pivot"), col("node"))
-    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    graft.core.BspLoop.pinned(e.sparkSession, e, levelFrames(0)) {
-    // Settled-union collapse (the bfsPairs treatment, measured there):
-    // unbounded lazy union legs grow the per-level plan linearly, so the
-    // settled set is re-materialized every `collapseEvery` levels —
-    // bounded plans at the cost of depth/4 extra copies of the pair set.
-    val collapseEvery = 4
-    var legs = 1
-    var growing = true
-    while (levelFrames.size <= maxDist && growing) {
-      val prev = levelFrames.last
+    val settled = new SettledUnion(levelFrames(0).select(col("pivot"), col("node")))
+    BspLoop.iterate("betweenness_fwd", levelFrames(0), maxDist, e) { (prev, _) =>
       // Union-fold (guide §2.4, the bfsPairs pattern): settled pairs
       // ride the σ-merge aggregate as null-σ marker rows — sum(sigma)
       // ignores them, max(old) flags the pair, and the filter keeps
-      // exactly the old anti-join's output for one Exchange instead of
-      // two.
+      // exactly the first-reach rows an anti-join would, for one
+      // Exchange instead of two.
       val freshPre = prev.join(e, prev("node") === e("src"))
         .select(col("pivot"), e("dst").as("nn"), col("sigma"),
           lit(false).as("old"))
-        .unionByName(settledU.select(col("pivot"), col("node").as("nn"),
+        .unionByName(settled.frame.select(col("pivot"), col("node").as("nn"),
           lit(null).cast("long").as("sigma"), lit(true).as("old")))
         .groupBy(col("pivot"), col("nn"))
         .agg(sum(col("sigma")).as("sigma"), max(col("old")).as("old"))
         .filter(!col("old"))
         .select(col("pivot"), col("nn").as("node"), col("sigma"))
-      graft.core.BspLoop.capture("betweenness_fwd", levelFrames.size, freshPre)
-      val (fresh, Seq(nFresh)) = graft.core.BspLoop.checkpointObserved(
-        freshPre, count(lit(1)))
-      if (nFresh == 0L) growing = false
-      else {
-        levelFrames += fresh
-        settledU = settledU.unionByName(fresh.select(col("pivot"), col("node")))
-        legs += 1
-        if (legs >= collapseEvery) { settledU = settledU.localCheckpoint(); legs = 1 }
-      }
+      BspLoop.Step(freshPre, Seq(count(lit(1))), done = _.head == 0L,
+        next = { (fresh, nFresh) =>
+          if (nFresh.head > 0L) {
+            levelFrames += fresh
+            settled.add(fresh.select(col("pivot"), col("node")))
+          }
+          fresh
+        })
     }
-    // Backward level sweep, FUSED (guide §2.4): level d+1's (σ_w, δ_w)
-    // pairing used to cost a dedicated join per level (levelFrames(d+1)
-    // left-joined to the previous contrib frame). Instead each level's
-    // σ values ride the SAME groupBy that folds the δ contributions, as
+    // Backward level sweep, FUSED (guide §2.4): each level's σ values
+    // ride the SAME groupBy that folds the δ contributions, as
     // zero-information marker rows (term NULL — sum ignores them; every
     // (pivot, node) pair is settled exactly once, so max over the single
     // marker recovers σ), and the aggregate emits (pivot, node, σ, δ)
-    // directly — `down` — which the next level consumes with no join.
-    // A node with no qualifying out-edges surfaces with δ = NULL; the
-    // old contrib frame omitted it, so `levels` filters it out (its
-    // coalesced δ = 0 rides into `down` either way, exactly what the
-    // old left join's coalesce produced). Two joins + one aggregate per
-    // level becomes two joins + one aggregate MINUS one exchange — the
-    // delta-attach join's — per level.
+    // directly — `down` — which the next level consumes with no
+    // σ-attach join (one exchange per level fewer). A node with no
+    // qualifying out-edges surfaces with δ = NULL and is filtered out of
+    // `levels`; its coalesced δ = 0 rides into `down`.
     val depth = levelFrames.size - 1
-    var down = levelFrames(depth)
+    val down0 = levelFrames(depth)
       .select(col("pivot"), col("node").as("w"), col("sigma").as("sw"),
         lit(0L).as("dw"))
-    for (lvl <- (depth - 1) to 0 by -1) {
-      val vs = levelFrames(lvl)
+    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    BspLoop.iterate("betweenness_back", down0, depth, e, levelFrames(0)) { (down, k) =>
+      val vs = levelFrames(depth - k)
         .select(col("pivot"), col("node").as("v"), col("sigma").as("sv"))
       val terms = vs.join(e, vs("v") === e("src"))
         .select(col("pivot"), col("v"), col("sv"), e("dst").as("w"))
@@ -1213,18 +1151,17 @@ object Graph {
         .select(col("pivot"), col("v"),
           expr("sv * (1000000L + dw) DIV sw").as("t"),
           lit(null).cast("long").as("sv_m"))
-      val fusedPre = vs.select(col("pivot"), col("v"),
+      BspLoop.Step(vs.select(col("pivot"), col("v"),
           lit(null).cast("long").as("t"), col("sv").as("sv_m"))
         .unionByName(terms)
         .groupBy(col("pivot"), col("v"))
-        .agg(sum(col("t")).as("delta_ppm"), max(col("sv_m")).as("sv"))
-      graft.core.BspLoop.capture("betweenness_back", depth - lvl, fusedPre)
-      val fused = fusedPre.localCheckpoint()
-      down = fused.select(col("pivot"), col("v").as("w"), col("sv").as("sw"),
-        coalesce(col("delta_ppm"), lit(0L)).as("dw"))
-      levels += fused.filter(col("delta_ppm").isNotNull)
-        .select(col("pivot"), col("v").as("w"), col("delta_ppm"))
-    }
+        .agg(sum(col("t")).as("delta_ppm"), max(col("sv_m")).as("sv")),
+        next = { (fused, _) =>
+          levels += fused.filter(col("delta_ppm").isNotNull)
+            .select(col("pivot"), col("v").as("w"), col("delta_ppm"))
+          fused.select(col("pivot"), col("v").as("w"), col("sv").as("sw"),
+            coalesce(col("delta_ppm"), lit(0L)).as("dw"))
+        })
     }
     val acc =
       if (levels.isEmpty)
@@ -1239,29 +1176,6 @@ object Graph {
         expr(s"(coalesce(s, 0L) * ${n}L) DIV ${k}L").as("betweenness_ppm"))
   }
 
-  /** Kleinberg HITS (hubs & authorities, SIAM JCOMP 1999) as the
-    * engine-portable integer fixed point on the [[pageRankE9]] BSP
-    * chassis: per step the mutual update
-    * `a(v) = Σ_{u→v} h(u)` then `h(u) = Σ_{u→v} a(v)`, each side
-    * L∞-NORMALIZED (divide by the step's max, the classic power-
-    * iteration stabilization — chosen over L1/L2 because an integer
-    * max-divide stays exact where a sqrt cannot) into ppm units, so
-    * every score lives in [0, 10⁶] with the step's best hub/authority
-    * pinned at exactly 10⁶ and the iteration can never overflow or
-    * drift. The normalizing products run in DECIMAL(38,0)
-    * (`s·10⁶ ≤ 10¹²·N` exceeds i64 past N ≈ 10⁷ — the pageRankE9
-    * `wide` treatment, unconditional here), landing back in BIGINT
-    * via DIV.
-    *
-    * Scale shape: each step is TWO of the chassis's canonical BSP
-    * shuffles (edges⋈scores on one endpoint, then groupBy the other
-    * with map-side combine absorbing degree skew); the per-step max is
-    * a 1-row broadcast (the dangling-mass pattern), and per-step
-    * localCheckpoints cut lineage so step N+1's plan never replans
-    * step N. Induced-subgraph restriction and the fail-loud empty-
-    * edge guard follow the chassis conventions (an empty edge list
-    * would put a 0 in the normalizing divisor — reject it, never
-    * divide). Returns (node, hub_ppm, auth_ppm). */
   /** Newman modularity of a community labeling, exact integer ppm —
     * the quality measure that closes the community family: LPA/CC
     * ASSIGN communities, this SCORES the assignment, the number a
@@ -1376,11 +1290,37 @@ object Graph {
       .orderBy("label")
   }
 
+  /** Kleinberg HITS (hubs & authorities, SIAM JCOMP 1999) as the
+    * engine-portable integer fixed point on the [[pageRankE9]] BSP
+    * chassis: per step the mutual update
+    * `a(v) = Σ_{u→v} h(u)` then `h(u) = Σ_{u→v} a(v)`, each side
+    * L∞-NORMALIZED (divide by the step's max, the classic power-
+    * iteration stabilization — chosen over L1/L2 because an integer
+    * max-divide stays exact where a sqrt cannot) into ppm units, so
+    * every score lives in [0, 10⁶] with the step's best hub/authority
+    * pinned at exactly 10⁶ and the iteration can never overflow or
+    * drift. The normalizing products run in DECIMAL(38,0)
+    * (`s·10⁶ ≤ 10¹²·N` exceeds i64 past N ≈ 10⁷ — the pageRankE9
+    * `wide` treatment, unconditional here), landing back in BIGINT
+    * via DIV.
+    *
+    * Scale shape: each step is TWO of the chassis's canonical BSP
+    * shuffles (edges⋈scores on one endpoint, then groupBy the other
+    * with map-side combine absorbing degree skew), each materialized
+    * with its L∞ max observed on the same job; the normalization then
+    * divides by that max as a LITERAL in a lazy projection over the
+    * materialized sums (the pageRank dangling-mass treatment), so the
+    * max costs no job, broadcast or cross join. Per-step
+    * localCheckpoints cut lineage so step N+1's plan never replans
+    * step N. Induced-subgraph restriction and the fail-loud empty-
+    * edge guard follow the chassis conventions (an empty edge list
+    * would put a 0 in the normalizing divisor — reject it, never
+    * divide). Returns (node, hub_ppm, auth_ppm). */
   def hitsPpm(edges: DataFrame, nodes: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "HITS needs at least one mutual update")
     val Scale = 1000000L
     val nset = nodes.select(col("node"))
-    val (e, Seq(nE)) = graft.core.BspLoop.checkpointObserved(
+    val (e, Seq(nE)) = BspLoop.checkpointObserved(
       edges.select(col("src"), col("dst"))
         .join(nset.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(nset.select(col("node").as("dst")), Seq("dst"), "left_semi"),
@@ -1390,45 +1330,34 @@ object Graph {
         "0; HITS is undefined on an edgeless graph")
     val normExpr = (raw: String, mx: Long) =>
       expr(s"CAST((CAST(coalesce($raw, 0L) AS DECIMAL(38,0)) * $Scale) DIV ${mx}L AS BIGINT)")
-    var hub = nset.select(col("node"), lit(Scale).as("h")).localCheckpoint()
+    val hub0 = nset.select(col("node"), lit(Scale).as("h")).localCheckpoint()
     var auth = nset.select(col("node"), lit(0L).as("a"))
-    // Each mutual update is TWO observed checkpoints (round 22): the
-    // raw sums materialize with their L∞ max observed on the same job
-    // (BspLoop.checkpointObserved — the pageRank-dangling treatment),
-    // and the normalization divides by the max as a LITERAL in a lazy
-    // projection over the materialized frame. The r21 shape paid, per
-    // side, a scalar max aggregate + a 1-row BroadcastExchange + a
-    // cross join (one extra driver-synchronized job each); both are
-    // gone, and the ReuseExchange subtlety the old single-checkpoint
-    // shape depended on is moot — each raw aggregate simply runs once.
-    // The max itself is unchanged: a bounded driver scalar (i64 — raw
-    // sums are ≤ 1e6·N before normalization), same integers, same DIV.
-    //
     // SPARSE score frames (guide §2.3 — shuffle fewer bytes): the loop
     // carries scores ONLY for nodes the aggregates produce (auth on
     // nodes with in-edges, hub on nodes with out-edges). A node absent
     // from the frame scores EXACTLY 0 — it contributes 0 to every
     // downstream sum whether the edge row joins a 0 or is dropped — so
-    // the per-iteration nset completion joins (two Exchanges per step
-    // re-shuffling the full node set) are deleted and every node is
-    // completed ONCE at exit via coalesce-0 left joins. The per-step
-    // max is unchanged: it is always attained by a strictly positive
-    // sum (e non-empty ⇒ some authority sum > 0 ⇒ some hub sum > 0,
-    // inductively), which both forms retain.
-    graft.core.BspLoop.pinned(e.sparkSession, e, hub) {
-    for (i <- 1 to iterations) {
-      val (aRaw, Seq(aMax)) = graft.core.BspLoop.checkpointObserved(
+    // no step re-shuffles the full node set to complete the frames;
+    // every node is completed ONCE at exit via coalesce-0 left joins.
+    // The per-step max is always attained by a strictly positive sum
+    // (e non-empty ⇒ some authority sum > 0 ⇒ some hub sum > 0,
+    // inductively), so the sparse frames keep it. The max is a bounded
+    // driver scalar (i64 — raw sums are ≤ 1e6·N before normalization).
+    // The authority half is materialized inside the step (its max must
+    // be known before the hub half can read it); the hub half is the
+    // step's own materialization.
+    val hub = BspLoop.iterate("hits", hub0, iterations, e) { (hub, _) =>
+      val (aRaw, Seq(aMax)) = BspLoop.checkpointObserved(
         e.join(hub, e("src") === hub("node"))
           .groupBy(col("dst")).agg(sum(col("h")).as("ar")),
         coalesce(max(col("ar")), lit(0L)))
       auth = aRaw.select(col("dst").as("node"), normExpr("ar", aMax).as("a"))
-      val (hRaw, Seq(hMax)) = graft.core.BspLoop.checkpointObserved(
-        e.join(auth, e("dst") === auth("node"))
+      BspLoop.Step(e.join(auth, e("dst") === auth("node"))
           .groupBy(col("src")).agg(sum(col("a")).as("hr")),
-        coalesce(max(col("hr")), lit(0L)))
-      hub = hRaw.select(col("src").as("node"), normExpr("hr", hMax).as("h"))
-    }
-    }
+        Seq(coalesce(max(col("hr")), lit(0L))),
+        next = (hRaw, hMax) =>
+          hRaw.select(col("src").as("node"), normExpr("hr", hMax.head).as("h")))
+    }.state
     nset.join(hub, Seq("node"), "left").join(auth, Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub_ppm"),
         coalesce(col("a"), lit(0L)).as("auth_ppm"))

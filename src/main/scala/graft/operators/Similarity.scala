@@ -213,23 +213,22 @@ object Similarity {
   def kmeansRefine(corpus: DataFrame, idCol: String, vecCol: String,
                    centroids: Array[(Long, Array[Double])],
                    iters: Int = 3): Array[(Long, Array[Double])] = {
-    var cents = centroids
-    var it = 0
+    // Each step is a driver collect with no frame to checkpoint, so the
+    // loop borrows only the chassis posture; the corpus is its one lazy
+    // input, scan-only, so its width is the scan's.
     graft.core.BspLoop.pinned(corpus.sparkSession, corpus) {
-    while (it < iters) {
-      val means = ivfAssign(corpus, idCol, vecCol, cents)
-        .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("list_id", "pos").agg(avg(col("x")).as("m"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
-        }
-      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-      it += 1
+      (1 to iters).foldLeft(centroids) { (cents, _) =>
+        val means = ivfAssign(corpus, idCol, vecCol, cents)
+          .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x")))
+          .groupBy("list_id", "pos").agg(avg(col("x")).as("m"))
+          .collect()
+          .groupBy(_.getLong(0))
+          .map { case (cid, rows) =>
+            cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
+          }
+        cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+      }
     }
-    }
-    cents
   }
 
   /** Train product-quantization codebooks (Jégou et al. 2011, "Product

@@ -902,12 +902,12 @@ object Extensions {
     var remaining = pool
     var out = pool.select(col("qid"), lit(0L).as("rank"), col("id"),
       col("rel"), lit(0L).as("mmr")).limit(0)
-    // NOT run under BspLoop.pinned: unlike the BSP chassis, this loop's
-    // per-step frames are LAZY anti-join chains over the checkpointed
-    // pool (deliberately so — see the no-further-lineage-cuts note
-    // below), and the static planner without AQE turns their in-step
-    // joins into shuffle joins; measured 1.8 s → 2.7 s pinned
-    // (LoopAqeAB, round 22). AQE stays on here.
+    // NOT run on the BspLoop chassis: unlike the graph loops, this
+    // loop's per-step frames are LAZY anti-join chains over the
+    // checkpointed pool (deliberately so — see the no-further-lineage-
+    // cuts note below), and the static planner without AQE turns their
+    // in-step joins into shuffle joins; an interleaved same-session A/B
+    // measured 1.8 s → 2.7 s pinned. AQE stays on here.
     for (step <- 1 to 5) {
       val scoredStep =
         if (step == 1) remaining.withColumn("mmr", col("rel") * 7)

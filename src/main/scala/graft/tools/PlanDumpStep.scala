@@ -8,15 +8,18 @@ import org.apache.spark.sql.SparkSession
   * iteration's PRE-checkpoint frame (graft.core.BspLoop.stepSink) and
   * write one representative step's `.explain("formatted")` per
   * (query, loop label) to plans/r22/. `localCheckpoint` severs lineage,
-  * so the plain PlanDump plans show only a Scan over the loop output —
-  * round 21's verdict called that out: the per-iteration shape
-  * (Exchange count per step, join strategy inside the loop) is only
-  * visible HERE. Args: tag stepK name [name ...] [/abs/sfDir]; for
+  * so the plain PlanDump plans show only a Scan over the loop output:
+  * the per-iteration shape (Exchange count per step, join strategy
+  * inside the loop) is only visible HERE. Args: tag stepK name [name ...] [/abs/sfDir]; for
   * loops shorter than stepK the deepest captured step is written. */
 object PlanDumpStep {
   def main(args: Array[String]): Unit = {
     val (dirs, rest) = args.toSeq.partition(_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
+    val usage = "usage: PlanDumpStep <tag> <stepK> <query> [query ...] [/abs/sfDir]"
+    require(rest.size >= 3, usage)
+    require(rest(1).toIntOption.exists(_ >= 0),
+      s"stepK must be a non-negative integer, got '${rest(1)}' — $usage")
     val tag = rest.head
     val stepK = rest(1).toInt
     val names = rest.drop(2)
@@ -27,10 +30,6 @@ object PlanDumpStep {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_LOOP_AQE=true reproduces the pre-round-22 loop
-    // posture (AQE on inside BSP loops) for before/after plan evidence
-    sys.env.get("SPARK_GRAFT_LOOP_AQE").foreach(v =>
-      spark.conf.set("spark.graft.loop.aqe", v))
     Files.createDirectories(Paths.get("plans/r22"))
     for (n <- names) {
       val plans = scala.collection.mutable.Map.empty[(String, Int), String]

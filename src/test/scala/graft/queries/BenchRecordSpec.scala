@@ -46,11 +46,18 @@ class BenchRecordSpec extends AnyFunSuite {
   test("BENCH_LOCAL.json was recorded on a quiet machine") {
     val json = java.nio.file.Files.readString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"))
-    val m = """"load1_prelaunch":(-?[0-9.]+)""".r.findFirstMatchIn(json)
+    // the whole number token, exponent included: a near-idle host's
+    // load average can print as 4.8828125E-4, which [0-9.]+ would cut
+    // to 4.88
+    def prelaunch(s: String): Option[Double] =
+      """"load1_prelaunch":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)""".r
+        .findFirstMatchIn(s).map(_.group(1).toDouble)
+    assert(prelaunch(""""load1_prelaunch":4.8828125E-4,""").exists(_ <= 1.5))
+    val m = prelaunch(json)
     assert(m.isDefined,
       "BENCH_LOCAL.json predates the load1_prelaunch field — re-run " +
-        "graft.Bench (round 22+) on a quiet machine and commit the refresh")
-    val pre = m.get.group(1).toDouble
+        "graft.Bench on a quiet machine and commit the refresh")
+    val pre = m.get
     assert(pre < 0 || pre <= 1.5,
       f"BENCH_LOCAL.json was recorded with pre-launch load1 $pre%.2f > 1.5 " +
         "— a contended machine; its numbers are not a usable cross-round " +

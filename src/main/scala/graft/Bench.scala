@@ -53,12 +53,16 @@ object Bench {
     // Run every batch query first, then the drains last.
     val (drains, batch) = SparkEntry.queries.toSeq.sortBy(_._1).partition(_._1.startsWith("stream_"))
     val order = batch ++ drains
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      // a crashed query must not masquerade as a fast pass: record -1.0
+      // a crashed query must not masquerade as a fast pass: record -1.0,
+      // and say on stderr which query failed and why
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case e: Throwable =>
+        System.err.println(s"BENCH: $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        -1.0
+      }
     }
     // 1-minute system load average at each pass boundary: n+1 samples
     // bracket the n passes, so a driver-side >1.5x row can be checked
@@ -68,7 +72,7 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loads = scala.collection.mutable.ListBuffer(loadAvg())
     val passes = (1 to 3).map { _ =>
-      val p = order.map { case (name, fn) => name -> timeOnce(fn) }
+      val p = order.map { case (name, fn) => name -> timeOnce(name, fn) }
       loads += loadAvg()
       p
     }
@@ -113,8 +117,11 @@ object Bench {
       System.err.println(f"BENCH: pre-launch load1 $loadPre%.2f > $loadMax%.2f — " +
         "writing BENCH_LOCAL_REJECTED.json, not the canonical record " +
         "(SPARK_GRAFT_FORCE_RECORD=1 overrides)")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(target), json + "\n")
-    catch { case _: Throwable => () }
+    val targetPath = java.nio.file.Paths.get(target).toAbsolutePath
+    try java.nio.file.Files.writeString(targetPath, json + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"BENCH: could not write $targetPath: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // Canonical-number rule (BASELINE.md round 17+): the COMMITTED file
     // is the cross-round record. Enforcement lives in BenchRecordSpec
     // (fails when the committed record's query set drifts from

@@ -89,60 +89,61 @@ object Main {
       val (flags, rest) = parseFlags(rest0, Set("jdbc-url", "jdbc-table"))
       rest match {
         case rawPath :: dimPath :: outDir :: Nil =>
-          val raw = Pipeline.dedupIngest(Pipeline.parseRaw(spark.read.text(rawPath)), None)
-          val res = Pipeline.enrich(Pipeline.cleanData(raw), Pipeline.siteDim(spark, dimPath))
-          val whCount = flags.get("jdbc-url") match {
-            case Some(url) =>
-              // the reference's actual storage layer (etl_process.py:271-289):
-              // dedup-append into the JDBC warehouse instead of parquet.
-              // Probe existence FIRST, via connection metadata — a
-              // read-and-catch probe would classify a transient
-              // connection/auth failure as 'table absent' and fall
-              // through to a destructive overwrite; here connection
-              // errors propagate and only a genuine metadata miss
-              // selects the create path.
-              val table = flags.getOrElse("jdbc-table", "warehouse")
-              val exists = {
-                val conn = java.sql.DriverManager.getConnection(url)
-                try {
-                  val md = conn.getMetaData
-                  // getTables takes a SEARCH PATTERN: a literal '_'/'%'
-                  // in the table name would act as a wildcard and a
-                  // same-named table elsewhere could false-positive the
-                  // probe — escape with the driver's own escape string
-                  val esc = md.getSearchStringEscape
-                  def quote(name: String) =
-                    name.replace(esc, esc + esc)
-                      .replace("_", esc + "_").replace("%", esc + "%")
-                  // scope to the connection's current schema (null →
-                  // any-schema wildcard), so the probe targets the same
-                  // table the unqualified read/write path resolves
-                  val schema = Option(conn.getSchema).map(quote).orNull
-                  def probe(name: String) = {
-                    val rs = md.getTables(null, schema, quote(name), null)
-                    try rs.next() finally rs.close()
-                  }
-                  // unquoted DDL folds case DB-specifically (Derby/H2 up,
-                  // Postgres down) — probe stored-case candidates
-                  probe(table) || probe(table.toUpperCase) || probe(table.toLowerCase)
-                } finally conn.close()
-              }
-              if (exists)
-                graft.sources.JdbcWarehouse.appendDedup(res.warehouse, url, table, "uniq_id")
-              else graft.sources.JdbcWarehouse.write(res.warehouse, url, table)
-              graft.sources.JdbcWarehouse.read(spark, url, table).count()
-            case None =>
-              // (state, post_month)-partitioned layout via the one shared
-              // writer (SURVEY §2.1 warehouse-sink mapping): geography
-              // predicates prune whole directories at scale, and the month
-              // key keeps the batch and streaming paths layout-identical
-              // so either can append later
-              graft.streaming.EtlStream.warehouseOverwrite(res.warehouse, s"$outDir/warehouse")
-              spark.read.parquet(s"$outDir/warehouse").count()
-          }
-          res.quarantine.write.mode("overwrite").parquet(s"$outDir/quarantine")
-          println(s"etl: warehouse=$whCount " +
-            s"quarantine=${spark.read.parquet(s"$outDir/quarantine").count()}")
+          val res = Pipeline.enrichEnvelopes(spark.read.text(rawPath), Pipeline.siteDim(spark, dimPath))
+          try {
+            val whCount = flags.get("jdbc-url") match {
+              case Some(url) =>
+                // the reference's actual storage layer (etl_process.py:271-289):
+                // dedup-append into the JDBC warehouse instead of parquet.
+                // Probe existence FIRST, via connection metadata — a
+                // read-and-catch probe would classify a transient
+                // connection/auth failure as 'table absent' and fall
+                // through to a destructive overwrite; here connection
+                // errors propagate and only a genuine metadata miss
+                // selects the create path.
+                val table = flags.getOrElse("jdbc-table", "warehouse")
+                val exists = {
+                  val conn = java.sql.DriverManager.getConnection(url)
+                  try {
+                    val md = conn.getMetaData
+                    // getTables takes a SEARCH PATTERN: a literal '_'/'%'
+                    // in the table name would act as a wildcard and a
+                    // same-named table elsewhere could false-positive the
+                    // probe — escape with the driver's own escape string
+                    val esc = md.getSearchStringEscape
+                    def quote(name: String) =
+                      name.replace(esc, esc + esc)
+                        .replace("_", esc + "_").replace("%", esc + "%")
+                    // scope to the connection's current schema (null →
+                    // any-schema wildcard), so the probe targets the same
+                    // table the unqualified read/write path resolves
+                    val schema = Option(conn.getSchema).map(quote).orNull
+                    def probe(name: String) = {
+                      val rs = md.getTables(null, schema, quote(name), null)
+                      try rs.next() finally rs.close()
+                    }
+                    // unquoted DDL folds case DB-specifically (Derby/H2 up,
+                    // Postgres down) — probe stored-case candidates
+                    probe(table) || probe(table.toUpperCase) || probe(table.toLowerCase)
+                  } finally conn.close()
+                }
+                if (exists)
+                  graft.sources.JdbcWarehouse.appendDedup(res.warehouse, url, table, "uniq_id")
+                else graft.sources.JdbcWarehouse.write(res.warehouse, url, table)
+                graft.sources.JdbcWarehouse.read(spark, url, table).count()
+              case None =>
+                // (state, post_month)-partitioned layout via the one shared
+                // writer (SURVEY §2.1 warehouse-sink mapping): geography
+                // predicates prune whole directories at scale, and the month
+                // key keeps the batch and streaming paths layout-identical
+                // so either can append later
+                graft.streaming.EtlStream.warehouseOverwrite(res.warehouse, s"$outDir/warehouse")
+                spark.read.parquet(s"$outDir/warehouse").count()
+            }
+            res.quarantine.write.mode("overwrite").parquet(s"$outDir/quarantine")
+            println(s"etl: warehouse=$whCount " +
+              s"quarantine=${spark.read.parquet(s"$outDir/quarantine").count()}")
+          } finally res.release()
         case _ => throw new IllegalArgumentException(usage)
       }
 

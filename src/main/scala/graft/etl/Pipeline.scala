@@ -14,8 +14,15 @@ import graft.functions.Extract
   *
   * Scale notes: dedup is one shuffle on uniq_id; enrichment broadcasts
   * the ≤479-row dim so the fact side never shuffles; quarantine is the
-  * anti-join complement (durable, unlike the reference's process-local
-  * `cannot_load` set); conform is two filters/semi-joins, no wide ops.
+  * join's unmatched complement (durable, unlike the reference's
+  * process-local `cannot_load` set); conform is two filters/semi-joins,
+  * no wide ops. A batch that feeds both sinks goes through
+  * [[enrichEnvelopes]]: the scan, the dedup shuffle and the HTML
+  * extraction run once into one persisted frame that both sides read,
+  * and the caller releases it per batch, so cached batches never pile
+  * up across a long-running stream. Without it every sink action
+  * re-runs the whole lineage, and the dedup's arbitrary pick of a
+  * duplicate could differ between the two sinks.
   */
 object Pipeline {
 
@@ -83,33 +90,58 @@ object Pipeline {
         col("State").as("state"), col("Region").as("region"),
         col("Division").as("division"))
 
-  /** Enrichment result: warehouse rows + quarantined rows. */
-  final case class Enriched(warehouse: DataFrame, quarantine: DataFrame)
+  /** Enrichment result: warehouse rows + quarantined rows, and the
+    * persisted frame both read when it came from [[enrichEnvelopes]]. */
+  final case class Enriched(warehouse: DataFrame, quarantine: DataFrame,
+                            materialized: Option[DataFrame] = None) {
+    /** Drops the materialization; a no-op for a lazy [[enrich]] result. */
+    def release(): Unit = materialized.foreach(_.unpersist())
+  }
 
-  /** Broadcast inner join on site_id (etl_process.py:320-323). The
+  /** Broadcast join on site_id (etl_process.py:320-323). The
     * reference's KeyError→bare-except (:332-335) silently drops unmatched
     * rows into an in-memory set; here the quarantine is the explicit
-    * anti-join complement — durable and auditable. Rows whose post_date
+    * complement of the join — durable and auditable. Rows whose post_date
     * failed to parse also quarantine (the reference's '' → TIMESTAMP
     * insert failure lands in the same except).
     */
-  def enrich(clean: DataFrame, dim: DataFrame): Enriched = {
-    val parsed = clean
+  def enrich(clean: DataFrame, dim: DataFrame): Enriched = split(classify(clean, dim))
+
+  /** parse → in-batch dedup → clean → enrich over raw JSON envelopes,
+    * with both sides reading ONE persisted frame (see the scale notes).
+    * The caller must `release()` the result when its sinks are written,
+    * also when one throws. */
+  def enrichEnvelopes(envelopes: DataFrame, dim: DataFrame): Enriched = {
+    val batch = classify(cleanData(parseRaw(envelopes).dropDuplicates("uniq_id")), dim).persist()
+    split(batch).copy(materialized = Some(batch))
+  }
+
+  /** The clean rows with parsed timestamps and a `site` struct of dim
+    * columns, left-joined only where post_date parsed: a NULL `site`
+    * marks the quarantine, so a row there appears exactly once even if
+    * the dim repeats its site_id. */
+  private def classify(clean: DataFrame, dim: DataFrame): DataFrame = {
+    val sites = dim.select(col("site_id").as("dim_site_id"),
+      struct(col("city"), col("division"), col("region"), col("state")).as("site"))
+    clean
       .withColumn("post_date_ts", try_to_timestamp(col("post_date"), lit("yyyy-MM-dd HH:mm:ss")))
       .withColumn("scrape_date_ts", try_to_timestamp(col("scrape_date"), lit("yyyy-MM-dd HH:mm:ss")))
-    val ok = parsed.filter(col("post_date_ts").isNotNull)
-      .join(broadcast(dim), Seq("site_id"), "inner")
+      .join(broadcast(sites),
+        col("site_id") === col("dim_site_id") && col("post_date_ts").isNotNull, "left")
+      .drop("dim_site_id")
+  }
+
+  private def split(classified: DataFrame): Enriched = {
+    val ok = classified.filter(col("site").isNotNull)
       .select(
-        col("ad_id"), col("ad_url"), col("category"), col("city"),
-        col("division"), col("locations"), col("other_ads"), col("phone"),
+        col("ad_id"), col("ad_url"), col("category"), col("site.city"),
+        col("site.division"), col("locations"), col("other_ads"), col("phone"),
         col("post_body"), col("post_date_ts").as("post_date"),
-        col("post_title"), col("poster_age"), col("region"),
+        col("post_title"), col("poster_age"), col("site.region"),
         col("scrape_date_ts").as("scrape_date"), col("site_id"),
-        col("state"), col("uniq_id"))
-    val bad = parsed.filter(col("post_date_ts").isNull)
-      .unionByName(parsed.filter(col("post_date_ts").isNotNull)
-        .join(broadcast(dim), Seq("site_id"), "left_anti"))
-      .drop("post_date_ts", "scrape_date_ts")
+        col("site.state"), col("uniq_id"))
+    val bad = classified.filter(col("site").isNull)
+      .drop("post_date_ts", "scrape_date_ts", "site")
     Enriched(ok, bad)
   }
 

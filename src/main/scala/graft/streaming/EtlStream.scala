@@ -19,6 +19,12 @@ import graft.etl.Pipeline
   *     survives as an idempotency re-check under replay, exactly-once
   *     effective semantics on top of at-least-once delivery)
   *   - in-memory `cannot_load` set → durable quarantine parquet sink
+  *   - one pass over each fetched batch → one materialization per
+  *     micro-batch ([[Pipeline.enrichEnvelopes]]) that both sinks read,
+  *     released once they are written: without it every sink action and
+  *     emptiness probe re-runs the raw scan, the dedup shuffle and the
+  *     HTML extraction, and per-batch release keeps a long-running
+  *     stream from accumulating cached batches.
   */
 object EtlStream {
 
@@ -44,23 +50,23 @@ object EtlStream {
       .trigger(if (drainAndStop) Trigger.AvailableNow()
                else Trigger.ProcessingTime(s"$pollSeconds seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = Pipeline.parseRaw(batch).dropDuplicates("uniq_id")
-        val res = Pipeline.enrich(Pipeline.cleanData(parsed), dim)
-        res.warehouse.persist()
+        val res = Pipeline.enrichEnvelopes(batch, dim)
         try {
-          // an empty batch (e.g. a replayed trigger whose rows all fell
-          // to quarantine) must not pay the warehouse key scan at all
-          if (res.warehouse.limit(1).count() > 0) {
+          // the month set doubles as the emptiness probe: a batch whose
+          // rows all fell to quarantine pays no warehouse read at all
+          val months = res.warehouse
+            .select(postMonth(col("post_date")).as("m")).distinct()
+            .collect().map(_.getString(0)).toSeq
+          if (months.nonEmpty) {
             // idempotency re-check: at-least-once file delivery + anti-join
             // against already-landed keys = effective exactly-once append.
-            val months = res.warehouse
-              .select(postMonth(col("post_date")).as("m")).distinct()
-              .collect().map(_.getString(0)).toSeq
-            val fresh = landedKeys(batch.sparkSession, warehouseDir, months) match {
-              case Some(keys) => res.warehouse.join(keys, Seq("uniq_id"), "left_anti")
-              case None       => res.warehouse
+            // One warehouse read serves both the key scan and the layout.
+            val landed = readWarehouse(batch.sparkSession, warehouseDir)
+            val fresh = landed match {
+              case Some(wh) => res.warehouse.join(keysIn(wh, months), Seq("uniq_id"), "left_anti")
+              case None     => res.warehouse
             }
-            warehouseAppend(fresh, warehouseDir)
+            append(fresh, warehouseDir, landed.forall(isMonthLayout))
           }
           // Replay-idempotent quarantine: the sink partitions by
           // batch_id and dynamically OVERWRITES only that partition, so
@@ -68,13 +74,13 @@ object EtlStream {
           // lost) rewrites its own directory instead of appending a
           // duplicate — the per-sink half of the exactly-once story the
           // warehouse anti-join provides for clean rows.
-          if (res.quarantine.limit(1).count() > 0)
+          if (!res.quarantine.isEmpty)
             res.quarantine.withColumn("batch_id", lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id")
               .parquet(quarantineDir)
-        } finally res.warehouse.unpersist()
+        } finally res.release()
         ()
       }
       .start()
@@ -106,7 +112,10 @@ object EtlStream {
     * warehouse keeps its layout (and its full-scan prune fallback)
     * until rewritten. */
   def warehouseAppend(df: DataFrame, warehouseDir: String): Unit =
-    if (hasMonthLayout(df.sparkSession, warehouseDir).getOrElse(true))
+    append(df, warehouseDir, hasMonthLayout(df.sparkSession, warehouseDir).getOrElse(true))
+
+  private def append(df: DataFrame, warehouseDir: String, monthLayout: Boolean): Unit =
+    if (monthLayout)
       df.withColumn("post_month", postMonth(col("post_date")))
         .write.mode("append").partitionBy("state", "post_month").parquet(warehouseDir)
     else
@@ -128,11 +137,18 @@ object EtlStream {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The warehouse as it stands, or None when it doesn't exist yet.
+    * Each read lists the directory and infers the schema (one job), so
+    * a batch reads once and derives both the layout and the keys. */
+  private def readWarehouse(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (!pathExists(spark, dir)) None else Some(spark.read.parquet(dir))
+
+  private def isMonthLayout(wh: DataFrame): Boolean = wh.columns.contains("post_month")
+
   /** None when the warehouse doesn't exist yet; otherwise whether its
     * layout carries the post_month partition column. */
   def hasMonthLayout(spark: SparkSession, dir: String): Option[Boolean] =
-    if (!pathExists(spark, dir)) None
-    else Some(spark.read.parquet(dir).columns.contains("post_month"))
+    readWarehouse(spark, dir).map(isMonthLayout)
 
   /** Already-landed uniq_ids an incoming row could collide with: the
     * warehouse key scan restricted, via partition pruning on
@@ -146,14 +162,14 @@ object EtlStream {
     */
   def landedKeys(spark: SparkSession, warehouseDir: String,
                  months: Seq[String]): Option[DataFrame] =
-    if (!pathExists(spark, warehouseDir)) None
-    else {
-      val wh = spark.read.parquet(warehouseDir)
-      val pruned =
-        if (wh.columns.contains("post_month")) wh.filter(col("post_month").isin(months: _*))
-        else wh   // legacy un-partitioned layout: full key scan, still correct
-      Some(pruned.select("uniq_id"))
-    }
+    readWarehouse(spark, warehouseDir).map(keysIn(_, months))
+
+  private def keysIn(wh: DataFrame, months: Seq[String]): DataFrame = {
+    val pruned =
+      if (isMonthLayout(wh)) wh.filter(col("post_month").isin(months: _*))
+      else wh   // legacy un-partitioned layout: full key scan, still correct
+    pruned.select("uniq_id")
+  }
 
   /** Streaming tumbling-window aggregation over the events schema
     * (q18's semantics, stream-native): watermarked event time, per-day

@@ -102,6 +102,122 @@ class EtlStreamSpec extends AnyFunSuite with SparkSpec {
     assert(ids.distinct.length == ids.length)
   }
 
+  /** The raw files each scan run while `body` runs reads, one entry per
+    * scan. A micro-batch reaches `foreachBatch` as an RDD scan over the
+    * source's file scan; a scan inside a cached plan runs once however
+    * many queries read the cache, so scans count by plan-node identity.
+    * The listener bus is asynchronous: a marker query posted last is
+    * waited for, so every batch query's event has been seen. */
+  private def rawScans(rawDir: String)(body: => Unit): Seq[Seq[String]] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    def lineageFiles(rdd: RDD[_]): Seq[Path] = rdd match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.toPath))
+      case r              => r.dependencies.flatMap(d => lineageFiles(d.rdd))
+    }
+    def scansIn(p: SparkPlan): Seq[(SparkPlan, Seq[Path])] = p.flatMap {
+      case s: FileSourceScanExec    => Seq(s -> s.relation.location.rootPaths)
+      case r: RDDScanExec           => Seq(r -> lineageFiles(r.rdd))
+      case m: InMemoryTableScanExec => scansIn(m.relation.cacheBuilder.cachedPlan)
+      case c: CommandResultExec     => scansIn(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => scansIn(a.executedPlan)
+      case q: QueryStageExec        => scansIn(q.plan)
+      case _                        => Nil
+    }
+    val seen = new java.util.IdentityHashMap[SparkPlan, Seq[Path]]()
+    def record(qe: QueryExecution): Unit =
+      seen.synchronized(scansIn(qe.executedPlan).foreach { case (n, ps) => seen.put(n, ps) })
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "scan_count_marker")) marker.countDown()
+        else record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("scan_count_marker").collect()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.synchronized(seen.values.asScala.toSeq)
+      .filter(_.exists(_.toString.contains(rawDir))).map(_.map(_.getName))
+  }
+
+  /** Runs `body` on an emptied cache and checks it left no cached plan
+    * and no persisted RDD behind (other suites share the session; their
+    * checkpointed RDDs are allowed to stay). */
+  private def leavesNothingCached(body: => Unit): Unit = {
+    spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    assert(spark.sharedState.cacheManager.isEmpty, "a batch's materialization stayed cached")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rdds),
+      "a batch's materialization stayed persisted")
+  }
+
+  test("each micro-batch scans its raw file once, and nothing stays cached") {
+    val rawDir = tmp(); val out = tmp()
+    val lines = Files.readString(Paths.get(fixture("raw_ads.jsonl"))).linesIterator.toSeq
+    Files.writeString(Paths.get(s"$rawDir/f1.jsonl"), lines.take(4).mkString("\n"))
+    Files.writeString(Paths.get(s"$rawDir/f2.jsonl"), lines.drop(4).mkString("\n"))
+    var scans = Seq.empty[Seq[String]]
+    leavesNothingCached {
+      scans = rawScans(rawDir) {
+        EtlStream.run(spark, rawDir, fixture("site_dim.csv"), s"$out/warehouse",
+          s"$out/quarantine", s"$out/checkpoint", maxFilesPerTrigger = 1)
+      }
+    }
+    // both sinks of both batches were written: the scans fed all of them
+    assert(spark.read.parquet(s"$out/warehouse").count() == 5)
+    assert(spark.read.parquet(s"$out/quarantine").count() == 2)
+    assert(scans.sortBy(_.mkString) == Seq(Seq("f1.jsonl"), Seq("f2.jsonl")),
+      s"expected one scan per micro-batch, got ${scans.size}: $scans")
+  }
+
+  test("a sink that throws still releases the batch's materialization") {
+    val rawDir = tmp(); val out = tmp()
+    Files.copy(Paths.get(fixture("raw_ads.jsonl")), Paths.get(s"$rawDir/batch1.jsonl"))
+    // a regular file where the quarantine directory should go: the
+    // warehouse append succeeds, then the quarantine write fails
+    val qr = s"$out/quarantine"
+    Files.writeString(Paths.get(qr), "not a directory")
+    leavesNothingCached {
+      intercept[Exception] {
+        EtlStream.run(spark, rawDir, fixture("site_dim.csv"), s"$out/warehouse", qr,
+          s"$out/checkpoint")
+      }
+    }
+    assert(spark.read.parquet(s"$out/warehouse").count() == 5)
+  }
+
+  test("a duplicated uniq_id lands in exactly one of warehouse and quarantine") {
+    val rawDir = tmp(); val out = tmp()
+    val wh = s"$out/warehouse"; val qr = s"$out/quarantine"
+    val good = Files.readString(Paths.get(fixture("raw_ads.jsonl"))).linesIterator.next()
+    val badDate = good.replace("Thursday, May 4, 2017 11:53 PM", "sometime last week")
+    assert(badDate != good)
+    // eight keys, each delivered twice in one batch: once clean, once
+    // with an unparseable post date (quarantine material), in both orders
+    val envelopes = (0 until 8).flatMap { k =>
+      val pair = Seq(good, badDate).map(_.replace("10000001", s"1000010$k"))
+      if (k % 2 == 0) pair else pair.reverse
+    }
+    Files.writeString(Paths.get(s"$rawDir/batch1.jsonl"), envelopes.mkString("\n"))
+    EtlStream.run(spark, rawDir, fixture("site_dim.csv"), wh, qr, s"$out/checkpoint")
+    def ids(dir: String) =
+      if (!Files.exists(Paths.get(dir))) Seq.empty[String]
+      else spark.read.parquet(dir).select("uniq_id").collect().map(_.getString(0)).toSeq
+    val both = ids(wh) ++ ids(qr)
+    assert(both.size == 8 && both.distinct.size == 8,
+      s"each uniq_id must reach exactly one sink: warehouse ${ids(wh)}, quarantine ${ids(qr)}")
+  }
+
   test("stream hllDaily: multi-batch drain with replayed duplicates equals the batch sketch exactly") {
     import org.apache.spark.sql.functions._
     // stage the events table TWICE, drained across micro-batches: the

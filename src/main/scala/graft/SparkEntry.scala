@@ -2,15 +2,27 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QuerySpec.{RowsOnly, Sql}
 import graft.queries.{Extensions => E, ExtensionOracles => EO, Inventory => I, Oracles => O, StreamingOracles => SO, StreamingQueries => SQ}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One declared query: its driver name, how to build it over an sf
+  * directory, and how the driver checks its rows. */
+final case class QuerySpec(name: String, build: (SparkSession, String) => DataFrame, oracle: QuerySpec.Oracle)
+
+object QuerySpec {
+  sealed trait Oracle
+  /** DuckDB SQL with the query's column names, total ORDER BY and
+    * rounding; the driver hash-compares the two results. */
+  final case class Sql(text: String) extends Oracle
+  /** No SQL twin can exist. The driver checks rows > 0; `reason` says
+    * why there is no twin and which suite asserts the rows instead. */
+  final case class RowsOnly(reason: String) extends Oracle
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` holds one entry per implemented operator from SURVEY.md §2;
-  * `oracleSql` holds the DuckDB-equivalent SQL for every entry whose
-  * result is exactly reproducible outside Spark (same column names, same
-  * total ORDER BY, same rounding). Entries without an oracle are
-  * rows-only checked by the driver and asserted in ScalaTest.
+  * `specs` declares every query exactly once, in one row with its
+  * oracle. `queries` and `oracleSql` are the driver's two views of it.
   */
 object SparkEntry {
 
@@ -18,470 +30,285 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     I.q5GroupbyAgg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_derived_key"    -> (I.q1DerivedKey(_, _)),
-    "q2_anti_join"      -> (I.q2AntiJoin(_, _)),
-    "q3_dim_join"       -> (I.q3DimJoin(_, _)),
-    "q4_scalar_subquery" -> (I.q4ScalarSubquery(_, _)),
-    "q5_groupby_agg"    -> (I.q5GroupbyAgg(_, _)),
-    "q6_distinct"       -> (I.q6Distinct(_, _)),
-    "q6b_distinct_values" -> (I.q6bDistinctValues(_, _)),
-    "q7_rollup"         -> (I.q7Rollup(_, _)),
-    "q8_approx_distinct" -> (I.q8ApproxDistinct(_, _)),
-    "q9_window_rank"    -> (I.q9WindowRank(_, _)),
-    "q10_window_frame"  -> (I.q10WindowFrame(_, _)),
-    "q11_topk"          -> (I.q11TopK(_, _)),
-    "q12_setops"        -> (I.q12SetOps(_, _)),
-    "q13_semi_join"     -> (I.q13SemiJoin(_, _)),
-    "q14_range_join"    -> (I.q14RangeJoin(_, _)),
-    "q15_phone_regex"   -> (I.q15PhoneRegex(_, _)),
-    "q16_date_json"     -> (I.q16DateJson(_, _)),
-    "q17_cross_join"    -> (I.q17CrossJoin(_, _)),
-    "q18_tumbling_day"  -> (I.q18TumblingDay(_, _)),
-    "q19_grouping_sets" -> (I.q19GroupingSets(_, _)),
-    "q20_cosine_topk"   -> (I.q20CosineTopk(_, _)),
-    "q21_array_ops"     -> (I.q21ArrayOps(_, _)),
-    "q22_asof_join"     -> (I.q22AsofJoin(_, _)),
-    "q23_sessionize"    -> (I.q23Sessionize(_, _)),
-    "q24_percentiles"   -> (I.q24Percentiles(_, _)),
-    "q24b_approx_percentiles" -> (I.q24bApproxPercentiles(_, _)),
-    "q25_topk_agg"      -> (I.q25TopkAgg(_, _)),
-    "q26_cube"          -> (I.q26Cube(_, _)),
-    "q27_pivot"         -> (I.q27Pivot(_, _)),
-    "q27b_unpivot"      -> (I.q27bUnpivot(_, _)),
-    "q28_window_nav"    -> (I.q28WindowNav(_, _)),
-    "q29_funnel"        -> (I.q29Funnel(_, _)),
-    "q30_full_outer"    -> (I.q30FullOuter(_, _)),
-    "q31_correlated"    -> (I.q31Correlated(_, _)),
-    "q32_recursive"     -> (I.q32Recursive(_, _)),
-    "q33_graph_walk"    -> (I.q33GraphWalk(_, _)),
-    "q34_range_frame"   -> (I.q34RangeFrame(_, _)),
-    "q35_window_distinct" -> (I.q35WindowDistinct(_, _)),
-    "q36_ntile"         -> (I.q36Ntile(_, _)),
-    "q37_gap_fill"      -> (I.q37GapFill(_, _)),
+  /** A registry table; a name declared twice fails here instead of one
+    * row silently replacing the other in the derived maps. */
+  def registry(rows: QuerySpec*): Seq[QuerySpec] = {
+    val dup = rows.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"query declared more than once: ${dup.toSeq.sorted.mkString(", ")}")
+    rows
+  }
+
+  val specs: Seq[QuerySpec] = registry(
+    QuerySpec("q1_derived_key", I.q1DerivedKey, Sql(O.q1DerivedKey)),
+    QuerySpec("q2_anti_join", I.q2AntiJoin, Sql(O.q2AntiJoin)),
+    QuerySpec("q3_dim_join", I.q3DimJoin, Sql(O.q3DimJoin)),
+    QuerySpec("q4_scalar_subquery", I.q4ScalarSubquery, Sql(O.q4ScalarSubquery)),
+    QuerySpec("q5_groupby_agg", I.q5GroupbyAgg, Sql(O.q5GroupbyAgg)),
+    QuerySpec("q6_distinct", I.q6Distinct, Sql(O.q6Distinct)),
+    QuerySpec("q6b_distinct_values", I.q6bDistinctValues, Sql(O.q6bDistinctValues)),
+    QuerySpec("q7_rollup", I.q7Rollup, Sql(O.q7Rollup)),
+    QuerySpec("q8_approx_distinct", I.q8ApproxDistinct, Sql(O.q8ApproxDistinct)),
+    QuerySpec("q9_window_rank", I.q9WindowRank, Sql(O.q9WindowRank)),
+    QuerySpec("q10_window_frame", I.q10WindowFrame, Sql(O.q10WindowFrame)),
+    QuerySpec("q11_topk", I.q11TopK, Sql(O.q11TopK)),
+    QuerySpec("q12_setops", I.q12SetOps, Sql(O.q12SetOps)),
+    QuerySpec("q13_semi_join", I.q13SemiJoin, Sql(O.q13SemiJoin)),
+    QuerySpec("q14_range_join", I.q14RangeJoin, Sql(O.q14RangeJoin)),
+    QuerySpec("q15_phone_regex", I.q15PhoneRegex, Sql(O.q15PhoneRegex)),
+    QuerySpec("q16_date_json", I.q16DateJson, Sql(O.q16DateJson)),
+    QuerySpec("q17_cross_join", I.q17CrossJoin, Sql(O.q17CrossJoin)),
+    QuerySpec("q18_tumbling_day", I.q18TumblingDay, Sql(O.q18TumblingDay)),
+    QuerySpec("q19_grouping_sets", I.q19GroupingSets, Sql(O.q19GroupingSets)),
+    QuerySpec("q20_cosine_topk", I.q20CosineTopk, Sql(O.q20CosineTopk)),
+    QuerySpec("q21_array_ops", I.q21ArrayOps, Sql(O.q21ArrayOps)),
+    QuerySpec("q22_asof_join", I.q22AsofJoin, Sql(O.q22AsofJoin)),
+    QuerySpec("q23_sessionize", I.q23Sessionize, Sql(O.q23Sessionize)),
+    QuerySpec("q24_percentiles", I.q24Percentiles, Sql(O.q24Percentiles)),
+    QuerySpec("q24b_approx_percentiles", I.q24bApproxPercentiles, Sql(O.q24bApproxPercentiles)),
+    QuerySpec("q25_topk_agg", I.q25TopkAgg, Sql(O.q25TopkAgg)),
+    QuerySpec("q26_cube", I.q26Cube, Sql(O.q26Cube)),
+    QuerySpec("q27_pivot", I.q27Pivot, Sql(O.q27Pivot)),
+    QuerySpec("q27b_unpivot", I.q27bUnpivot, Sql(O.q27bUnpivot)),
+    QuerySpec("q28_window_nav", I.q28WindowNav, Sql(O.q28WindowNav)),
+    QuerySpec("q29_funnel", I.q29Funnel, Sql(O.q29Funnel)),
+    QuerySpec("q30_full_outer", I.q30FullOuter, Sql(O.q30FullOuter)),
+    QuerySpec("q31_correlated", I.q31Correlated, Sql(O.q31Correlated)),
+    QuerySpec("q32_recursive", I.q32Recursive, Sql(O.q32Recursive)),
+    QuerySpec("q33_graph_walk", I.q33GraphWalk, Sql(O.q33GraphWalk)),
+    QuerySpec("q34_range_frame", I.q34RangeFrame, Sql(O.q34RangeFrame)),
+    QuerySpec("q35_window_distinct", I.q35WindowDistinct, Sql(O.q35WindowDistinct)),
+    QuerySpec("q36_ntile", I.q36Ntile, Sql(O.q36Ntile)),
+    QuerySpec("q37_gap_fill", I.q37GapFill, Sql(O.q37GapFill)),
     // LLM-data-pipeline operators (BASELINE.json north star)
-    "dedup_exact"       -> (E.dedupExact(_, _)),
-    "dedup_url"         -> (E.dedupUrl(_, _)),
-    "domain_quota"      -> (E.domainQuota(_, _)),
-    "dedup_substring"   -> (E.dedupSubstring(_, _)),
-    "text_ngrams"       -> (E.textNgrams(_, _)),
-    "text_pmi"          -> (E.textPmi(_, _)),
-    "text_heavy_hitters" -> (E.textHeavyHitters(_, _)),
-    "events_hll_daily"  -> (E.eventsHllDaily(_, _)),
-    "dedup_jaccard"     -> (E.dedupJaccard(_, _)),
-    "dedup_containment" -> (E.dedupContainment(_, _)),
-    "dedup_jaccard_char" -> (E.dedupJaccardChar(_, _)),
-    "dedup_minhash"     -> (E.dedupMinhash(_, _)),
-    "dedup_minhash_clusters" -> (E.dedupMinhashClusters(_, _)),
-    "corpus_overlap"    -> (E.corpusOverlap(_, _)),
-    "dedup_minhash_verify" -> (E.dedupMinhashVerify(_, _)),
-    "corpus_incremental" -> (E.corpusIncremental(_, _)),
-    "dedup_simhash"     -> (E.dedupSimhash(_, _)),
-    "dedup_embedding"   -> (E.dedupEmbedding(_, _)),
-    "dedup_semantic"    -> (E.dedupSemantic(_, _)),
-    "ann_lsh_topk"      -> (E.annLsh(_, _)),
-    "ann_ivf_topk"      -> (E.annIvf(_, _)),
-    "ann_ivf_stored"    -> (E.annIvfStored(_, _)),
-    "ann_ivf_delta"     -> (E.annIvfDelta(_, _)),
-    "ann_ivf_kmeans"    -> (E.annIvfKmeans(_, _)),
-    "ann_filtered"      -> (E.annFiltered(_, _)),
-    "ann_ivfpq_topk"    -> (E.annIvfPq(_, _)),
-    "ann_knn_join"      -> (E.annKnnJoin(_, _)),
-    "emb_quantize"      -> (E.embQuantize(_, _)),
-    "emb_centroid"      -> (E.embCentroid(_, _)),
-    "emb_classify"      -> (E.embClassify(_, _)),
-    "ann_q8_topk"       -> (E.annQ8(_, _)),
-    "ann_q8_range"      -> (E.annQ8Range(_, _)),
-    "corpus_split"      -> (E.corpusSplit(_, _)),
-    "corpus_sample"     -> (E.corpusSample(_, _)),
-    "corpus_reservoir"  -> (E.corpusReservoir(_, _)),
-    "corpus_leakage"    -> (E.corpusLeakage(_, _)),
-    "corpus_pack"       -> (E.corpusPack(_, _)),
-    "corpus_interleave" -> (E.corpusInterleave(_, _)),
-    "corpus_mix"        -> (E.corpusMix(_, _)),
-    "corpus_decontam"   -> (E.corpusDecontam(_, _)),
-    "corpus_decontam_bloom" -> (E.corpusDecontamBloom(_, _)),
-    "corpus_chunk"      -> (E.corpusChunk(_, _)),
-    "corpus_offsets"    -> (E.corpusOffsets(_, _)),
-    "corpus_shard"      -> (E.corpusShard(_, _)),
-    "corpus_token_budget" -> (E.corpusTokenBudget(_, _)),
-    "corpus_hist"       -> (E.corpusHist(_, _)),
-    "corpus_stats"      -> (E.corpusStats(_, _)),
-    "layout_zorder"     -> (E.layoutZorder(_, _)),
-    "layout_hilbert"    -> (E.layoutHilbert(_, _)),
-    "layout_hilbert_stored" -> (E.layoutHilbertStored(_, _)),
-    "layout_zorder_stored" -> (E.layoutZorderStored(_, _)),
-    "line_dedup"        -> (E.lineDedup(_, _)),
-    "corpus_curate"     -> (E.corpusCurate(_, _)),
-    "corpus_curate2"    -> (E.corpusCurate2(_, _)),
-    "corpus_curate3"    -> (E.corpusCurate3(_, _)),
-    "corpus_curate4"    -> (E.corpusCurate4(_, _)),
-    "text_tokens"       -> (E.textTokens(_, _)),
-    "text_quality"      -> (E.textQuality(_, _)),
-    "text_langid"       -> (E.textLangid(_, _)),
-    "text_tfidf"        -> (E.textTfidf(_, _)),
-    "text_bm25"         -> (E.textBm25(_, _)),
-    "retrieve_hybrid"   -> (E.retrieveHybrid(_, _)),
-    "emb_hard_negatives" -> (E.embHardNegatives(_, _)),
-    "text_redact"       -> (E.textRedact(_, _)),
-    "text_repetition"   -> (E.textRepetition(_, _)),
-    "text_familiarity"  -> (E.textFamiliarity(_, _)),
-    "text_lm_bigram"    -> (E.textLmBigram(_, _)),
-    "text_lm_trigram"   -> (E.textLmTrigram(_, _)),
-    "bpe_tokens"        -> (E.bpeTokens(_, _)),
-    "text_compress"     -> (E.textCompress(_, _)),
-    "text_script"       -> (E.textScript(_, _)),
-    "text_gopher"       -> (E.textGopher(_, _)),
-    "url_filter"        -> (E.urlFilter(_, _)),
-    "url_robots"        -> (E.urlRobots(_, _)),
-    "text_fingerprint"  -> (E.textFingerprint(_, _)),
-    "text_winnow"       -> (E.textWinnow(_, _)),
-    "mm_bytes"          -> (E.mmBytes(_, _)),
-    "mm_decode"         -> (E.mmDecode(_, _)),
-    "mm_frames"         -> (E.mmFrames(_, _)),
-    "mm_resize"         -> (E.mmResize(_, _)),
-    "mm_audio"          -> (E.mmAudio(_, _)),
-    "mm_pcm"            -> (E.mmPcm(_, _)),
-    "mm_video"          -> (E.mmVideo(_, _)),
-    "mm_video_frames"   -> (E.mmVideoFrames(_, _)),
-    "mm_video_sample"   -> (E.mmVideoSample(_, _)),
-    "mm_video_dedup"    -> (E.mmVideoDedup(_, _)),
-    "mm_video_phash"    -> (E.mmVideoPhash(_, _)),
-    "mm_video_scene"    -> (E.mmVideoScene(_, _)),
-    "mm_audio_scene"    -> (E.mmAudioScene(_, _)),
-    "mm_audio_dedup"    -> (E.mmAudioDedup(_, _)),
-    "mm_audio_fp"       -> (E.mmAudioFp(_, _)),
-    "mm_audio_neardup"  -> (E.mmAudioNeardup(_, _)),
-    "mm_image_dedup"    -> (E.mmImageDedup(_, _)),
-    "mm_image_phash"    -> (E.mmImagePhash(_, _)),
-    "mm_image_neardup"  -> (E.mmImageNeardup(_, _)),
-    "mm_census"         -> (E.mmCensus(_, _)),
-    "mm_curate"         -> (E.mmCurate(_, _)),
+    QuerySpec("dedup_exact", E.dedupExact, Sql(EO.dedupExact)),
+    QuerySpec("dedup_url", E.dedupUrl, Sql(EO.dedupUrl)),
+    QuerySpec("domain_quota", E.domainQuota, Sql(EO.domainQuota)),
+    QuerySpec("dedup_substring", E.dedupSubstring, Sql(EO.dedupSubstring)),
+    QuerySpec("text_ngrams", E.textNgrams, Sql(EO.textNgrams)),
+    QuerySpec("text_pmi", E.textPmi, Sql(EO.textPmi)),
+    QuerySpec("text_heavy_hitters", E.textHeavyHitters, Sql(EO.textHeavyHitters)),
+    QuerySpec("events_hll_daily", E.eventsHllDaily, Sql(EO.eventsHllDaily)),
+    QuerySpec("dedup_jaccard", E.dedupJaccard, Sql(EO.dedupJaccard)),
+    QuerySpec("dedup_containment", E.dedupContainment, Sql(EO.dedupContainment)),
+    QuerySpec("dedup_jaccard_char", E.dedupJaccardChar, Sql(EO.dedupJaccardChar)),
+    QuerySpec("dedup_minhash", E.dedupMinhash, Sql(EO.dedupMinhash)),
+    QuerySpec("dedup_minhash_clusters", E.dedupMinhashClusters, Sql(EO.dedupMinhashClusters)),
+    QuerySpec("corpus_overlap", E.corpusOverlap, Sql(EO.corpusOverlap)),
+    QuerySpec("dedup_minhash_verify", E.dedupMinhashVerify, Sql(EO.dedupMinhashVerify)),
+    QuerySpec("corpus_incremental", E.corpusIncremental, Sql(EO.corpusIncremental)),
+    QuerySpec("dedup_simhash", E.dedupSimhash, Sql(EO.dedupSimhash)),
+    QuerySpec("dedup_embedding", E.dedupEmbedding, Sql(EO.dedupEmbedding)),
+    QuerySpec("dedup_semantic", E.dedupSemantic, Sql(EO.dedupSemantic)),
+    // shared exact top-10 — the index must find the exact neighbours
+    QuerySpec("ann_lsh_topk", E.annLsh, Sql(EO.annExactTop10)),
+    // shared exact top-10 — the index must find the exact neighbours
+    QuerySpec("ann_ivf_topk", E.annIvf, Sql(EO.annExactTop10)),
+    QuerySpec("ann_ivf_stored", E.annIvfStored, RowsOnly(
+      "an exact twin would reintroduce the full scan the stored partition-pruned probe exists to avoid; " +
+        "SimilaritySpec pins its pruned probes and results identical to the in-memory IVF")),
+    // shared with the exact top-10 — merge-on-read freshness is the gate
+    QuerySpec("ann_ivf_delta", E.annIvfDelta, Sql(EO.annExactTop10)),
+    // shared exact top-10 — the index must find the exact neighbours
+    QuerySpec("ann_ivf_kmeans", E.annIvfKmeans, Sql(EO.annExactTop10)),
+    QuerySpec("ann_filtered", E.annFiltered, Sql(EO.annFilteredExact)),
+    // shared exact top-10 — the index must find the exact neighbours
+    QuerySpec("ann_ivfpq_topk", E.annIvfPq, Sql(EO.annExactTop10)),
+    QuerySpec("ann_knn_join", E.annKnnJoin, RowsOnly(
+      "an exact twin is the quadratic all-pairs join the list_id equi-join exists to avoid; " +
+        "SimilaritySpec pins exact re-ranked sims, a recall floor and an equi-join-only plan")),
+    QuerySpec("emb_quantize", E.embQuantize, Sql(EO.embQuantize)),
+    QuerySpec("emb_centroid", E.embCentroid, Sql(EO.embCentroid)),
+    QuerySpec("emb_classify", E.embClassify, Sql(EO.embClassify)),
+    QuerySpec("ann_q8_topk", E.annQ8, Sql(EO.annQ8)),
+    QuerySpec("ann_q8_range", E.annQ8Range, Sql(EO.annQ8Range)),
+    QuerySpec("corpus_split", E.corpusSplit, Sql(EO.corpusSplit)),
+    QuerySpec("corpus_sample", E.corpusSample, Sql(EO.corpusSample)),
+    QuerySpec("corpus_reservoir", E.corpusReservoir, Sql(EO.corpusReservoir)),
+    QuerySpec("corpus_leakage", E.corpusLeakage, Sql(EO.corpusLeakage)),
+    QuerySpec("corpus_pack", E.corpusPack, Sql(EO.corpusPack)),
+    QuerySpec("corpus_interleave", E.corpusInterleave, Sql(EO.corpusInterleave)),
+    QuerySpec("corpus_mix", E.corpusMix, Sql(EO.corpusMix)),
+    QuerySpec("corpus_decontam", E.corpusDecontam, Sql(EO.corpusDecontam)),
+    // shared with the exact path — the Bloom prefilter must not change a row
+    QuerySpec("corpus_decontam_bloom", E.corpusDecontamBloom, Sql(EO.corpusDecontam)),
+    QuerySpec("corpus_chunk", E.corpusChunk, Sql(EO.corpusChunk)),
+    QuerySpec("corpus_offsets", E.corpusOffsets, Sql(EO.corpusOffsets)),
+    QuerySpec("corpus_shard", E.corpusShard, Sql(EO.corpusShard)),
+    QuerySpec("corpus_token_budget", E.corpusTokenBudget, Sql(EO.corpusTokenBudget)),
+    QuerySpec("corpus_hist", E.corpusHist, Sql(EO.corpusHist)),
+    QuerySpec("corpus_stats", E.corpusStats, Sql(EO.corpusStats)),
+    QuerySpec("layout_zorder", E.layoutZorder, Sql(EO.layoutZorder)),
+    QuerySpec("layout_hilbert", E.layoutHilbert, Sql(EO.layoutHilbert)),
+    QuerySpec("layout_hilbert_stored", E.layoutHilbertStored, Sql(EO.layoutHilbertStored)),
+    QuerySpec("layout_zorder_stored", E.layoutZorderStored, Sql(EO.layoutZorderStored)),
+    QuerySpec("line_dedup", E.lineDedup, Sql(EO.lineDedup)),
+    QuerySpec("corpus_curate", E.corpusCurate, Sql(EO.corpusCurate)),
+    QuerySpec("corpus_curate2", E.corpusCurate2, Sql(EO.corpusCurate2)),
+    QuerySpec("corpus_curate3", E.corpusCurate3, Sql(EO.corpusCurate3)),
+    QuerySpec("corpus_curate4", E.corpusCurate4, Sql(EO.corpusCurate4)),
+    QuerySpec("text_tokens", E.textTokens, Sql(EO.textTokens)),
+    QuerySpec("text_quality", E.textQuality, Sql(EO.textQuality)),
+    QuerySpec("text_langid", E.textLangid, Sql(EO.textLangid)),
+    QuerySpec("text_tfidf", E.textTfidf, Sql(EO.textTfidf)),
+    QuerySpec("text_bm25", E.textBm25, Sql(EO.textBm25)),
+    QuerySpec("retrieve_hybrid", E.retrieveHybrid, Sql(EO.retrieveHybrid)),
+    QuerySpec("emb_hard_negatives", E.embHardNegatives, Sql(EO.embHardNegatives)),
+    QuerySpec("text_redact", E.textRedact, Sql(EO.textRedact)),
+    QuerySpec("text_repetition", E.textRepetition, Sql(EO.textRepetition)),
+    QuerySpec("text_familiarity", E.textFamiliarity, Sql(EO.textFamiliarity)),
+    QuerySpec("text_lm_bigram", E.textLmBigram, Sql(EO.textLmBigram)),
+    QuerySpec("text_lm_trigram", E.textLmTrigram, Sql(EO.textLmTrigram)),
+    QuerySpec("bpe_tokens", E.bpeTokens, RowsOnly(
+      "the merges come from a trained, corpus-dependent artifact no SQL engine reproduces; " +
+        "BpeSpec pins hand-computed merges, determinism and partition independence")),
+    QuerySpec("text_compress", E.textCompress, RowsOnly(
+      "the zlib bit stream is specific to the library version; " +
+        "TextAnalysisSpec pins a deterministic ratio order (repetitive < prose < noise)")),
+    QuerySpec("text_script", E.textScript, Sql(EO.textScript)),
+    QuerySpec("text_gopher", E.textGopher, Sql(EO.textGopher)),
+    QuerySpec("url_filter", E.urlFilter, Sql(EO.urlFilter)),
+    QuerySpec("url_robots", E.urlRobots, Sql(EO.urlRobots)),
+    QuerySpec("text_fingerprint", E.textFingerprint, RowsOnly(
+      "seeded rolling-FNV values are engine-specific by construction; " +
+        "TextAnalysisSpec pins determinism, and the portable md5-bounds twin is oracle-checked")),
+    QuerySpec("text_winnow", E.textWinnow, Sql(EO.textWinnow)),
+    QuerySpec("mm_bytes", E.mmBytes, Sql(EO.mmBytes)),
+    QuerySpec("mm_decode", E.mmDecode, Sql(EO.mmDecode)),
+    QuerySpec("mm_frames", E.mmFrames, Sql(EO.mmFrames)),
+    QuerySpec("mm_resize", E.mmResize, Sql(EO.mmResize)),
+    QuerySpec("mm_audio", E.mmAudio, Sql(EO.mmAudio)),
+    QuerySpec("mm_pcm", E.mmPcm, Sql(EO.mmPcm)),
+    QuerySpec("mm_video", E.mmVideo, Sql(EO.mmVideo)),
+    QuerySpec("mm_video_frames", E.mmVideoFrames, Sql(EO.mmVideoFrames)),
+    QuerySpec("mm_video_sample", E.mmVideoSample, Sql(EO.mmVideoSample)),
+    QuerySpec("mm_video_dedup", E.mmVideoDedup, Sql(EO.mmVideoDedup)),
+    QuerySpec("mm_video_phash", E.mmVideoPhash, Sql(EO.mmVideoPhash)),
+    QuerySpec("mm_video_scene", E.mmVideoScene, Sql(EO.mmVideoScene)),
+    QuerySpec("mm_audio_scene", E.mmAudioScene, Sql(EO.mmAudioScene)),
+    QuerySpec("mm_audio_dedup", E.mmAudioDedup, Sql(EO.mmAudioDedup)),
+    QuerySpec("mm_audio_fp", E.mmAudioFp, Sql(EO.mmAudioFp)),
+    QuerySpec("mm_audio_neardup", E.mmAudioNeardup, Sql(EO.mmAudioNeardup)),
+    QuerySpec("mm_image_dedup", E.mmImageDedup, Sql(EO.mmImageDedup)),
+    QuerySpec("mm_image_phash", E.mmImagePhash, Sql(EO.mmImagePhash)),
+    QuerySpec("mm_image_neardup", E.mmImageNeardup, Sql(EO.mmImageNeardup)),
+    QuerySpec("mm_census", E.mmCensus, Sql(EO.mmCensus)),
+    QuerySpec("mm_curate", E.mmCurate, Sql(EO.mmCurate)),
     // scale utilities on the declared surface: salt-invariant skew join,
     // layout-invariant bucketed join (zero-Exchange plan in PlanAuditSpec)
-    "skew_join"         -> (E.skewJoin(_, _)),
-    "bucketed_join"     -> (E.bucketedJoin(_, _)),
+    QuerySpec("skew_join", E.skewJoin, Sql(EO.skewJoin)),
+    QuerySpec("bucketed_join", E.bucketedJoin, Sql(EO.bucketedJoin)),
     // iterative BSP graph computation (fixed-point integer PageRank,
     // min-label connected components)
-    "graph_pagerank"    -> (E.graphPagerank(_, _)),
-    "graph_hits"        -> (E.graphHits(_, _)),
-    "graph_modularity"  -> (E.graphModularity(_, _)),
-    "graph_conductance" -> (E.graphConductance(_, _)),
-    "graph_modularity_volume" -> (E.graphModularityVolume(_, _)),
-    "graph_hits_volume" -> (E.graphHitsVolume(_, _)),
-    "graph_pagerank_wide" -> (E.graphPagerankWide(_, _)),
-    "graph_pagerank_weighted" -> (E.graphPagerankWeighted(_, _)),
-    "graph_pagerank_volume" -> (E.graphPagerankVolume(_, _)),
-    "graph_ppr_volume"  -> (E.graphPprVolume(_, _)),
-    "graph_pagerank_weighted_volume" -> (E.graphPagerankWeightedVolume(_, _)),
-    "graph_cc_volume"   -> (E.graphCcVolume(_, _)),
-    "graph_sssp_volume" -> (E.graphSsspVolume(_, _)),
-    "graph_ppr"         -> (E.graphPpr(_, _)),
-    "graph_cc"          -> (E.graphCc(_, _)),
-    "graph_scc"         -> (E.graphScc(_, _)),
-    "graph_scc_volume"  -> (E.graphSccVolume(_, _)),
-    "graph_kcore_volume" -> (E.graphKcoreVolume(_, _)),
-    "graph_lpa_volume"  -> (E.graphLpaVolume(_, _)),
-    "graph_triangles_volume" -> (E.graphTrianglesVolume(_, _)),
-    "graph_sssp"        -> (E.graphSssp(_, _)),
-    "graph_reciprocity" -> (E.graphReciprocity(_, _)),
-    "corpus_novelty"    -> (E.corpusNovelty(_, _)),
-    "corpus_dup_hist"   -> (E.corpusDupHist(_, _)),
-    "graph_harmonic"    -> (E.graphHarmonic(_, _)),
-    "graph_harmonic_hll" -> (E.graphHarmonicHll(_, _)),
-    "graph_nf"          -> (E.graphNf(_, _)),
-    "graph_nf_hll"      -> (E.graphNfHll(_, _)),
-    "graph_triangles"   -> (E.graphTriangles(_, _)),
-    "graph_clustering"  -> (E.graphClustering(_, _)),
-    "graph_linkpred"    -> (E.graphLinkpred(_, _)),
-    "graph_linkpred_volume" -> (E.graphLinkpredVolume(_, _)),
-    "graph_kcore"       -> (E.graphKcore(_, _)),
-    "graph_lpa"         -> (E.graphLpa(_, _)),
-    "graph_coaccess"    -> (E.graphCoaccess(_, _)),
-    "graph_betweenness" -> (E.graphBetweenness(_, _)),
-    "graph_betweenness_volume" -> (E.graphBetweennessVolume(_, _)),
+    QuerySpec("graph_pagerank", E.graphPagerank, Sql(EO.graphPagerank)),
+    QuerySpec("graph_hits", E.graphHits, Sql(EO.graphHits)),
+    QuerySpec("graph_modularity", E.graphModularity, Sql(EO.graphModularity)),
+    QuerySpec("graph_conductance", E.graphConductance, Sql(EO.graphConductance)),
+    QuerySpec("graph_modularity_volume", E.graphModularityVolume, Sql(EO.graphModularityVolume)),
+    QuerySpec("graph_hits_volume", E.graphHitsVolume, Sql(EO.graphHitsVolume)),
+    // shared with the i64 path — wide arithmetic must not change a rank
+    QuerySpec("graph_pagerank_wide", E.graphPagerankWide, Sql(EO.graphPagerank)),
+    QuerySpec("graph_pagerank_weighted", E.graphPagerankWeighted, Sql(EO.graphPagerankWeighted)),
+    QuerySpec("graph_pagerank_volume", E.graphPagerankVolume, Sql(EO.graphPagerankVolume)),
+    QuerySpec("graph_ppr_volume", E.graphPprVolume, Sql(EO.graphPprVolume)),
+    QuerySpec("graph_pagerank_weighted_volume", E.graphPagerankWeightedVolume, Sql(EO.graphPagerankWeightedVolume)),
+    QuerySpec("graph_cc_volume", E.graphCcVolume, Sql(EO.graphCcVolume)),
+    QuerySpec("graph_sssp_volume", E.graphSsspVolume, Sql(EO.graphSsspVolume)),
+    QuerySpec("graph_ppr", E.graphPpr, Sql(EO.graphPpr)),
+    QuerySpec("graph_cc", E.graphCc, Sql(EO.graphCc)),
+    QuerySpec("graph_scc", E.graphScc, Sql(EO.graphScc)),
+    QuerySpec("graph_scc_volume", E.graphSccVolume, Sql(EO.graphSccVolume)),
+    QuerySpec("graph_kcore_volume", E.graphKcoreVolume, Sql(EO.graphKcoreVolume)),
+    QuerySpec("graph_lpa_volume", E.graphLpaVolume, Sql(EO.graphLpaVolume)),
+    QuerySpec("graph_triangles_volume", E.graphTrianglesVolume, Sql(EO.graphTrianglesVolume)),
+    QuerySpec("graph_sssp", E.graphSssp, Sql(EO.graphSssp)),
+    QuerySpec("graph_reciprocity", E.graphReciprocity, Sql(EO.graphReciprocity)),
+    QuerySpec("corpus_novelty", E.corpusNovelty, Sql(EO.corpusNovelty)),
+    QuerySpec("corpus_dup_hist", E.corpusDupHist, Sql(EO.corpusDupHist)),
+    QuerySpec("graph_harmonic", E.graphHarmonic, Sql(EO.graphHarmonic)),
+    QuerySpec("graph_harmonic_hll", E.graphHarmonicHll, Sql(EO.graphHarmonicHll)),
+    QuerySpec("graph_nf", E.graphNf, Sql(EO.graphNf)),
+    QuerySpec("graph_nf_hll", E.graphNfHll, Sql(EO.graphNfHll)),
+    QuerySpec("graph_triangles", E.graphTriangles, Sql(EO.graphTriangles)),
+    QuerySpec("graph_clustering", E.graphClustering, Sql(EO.graphClustering)),
+    QuerySpec("graph_linkpred", E.graphLinkpred, Sql(EO.graphLinkpred)),
+    QuerySpec("graph_linkpred_volume", E.graphLinkpredVolume, Sql(EO.graphLinkpredVolume)),
+    QuerySpec("graph_kcore", E.graphKcore, Sql(EO.graphKcore)),
+    QuerySpec("graph_lpa", E.graphLpa, Sql(EO.graphLpa)),
+    QuerySpec("graph_coaccess", E.graphCoaccess, Sql(EO.graphCoaccess)),
+    QuerySpec("graph_betweenness", E.graphBetweenness, Sql(EO.graphBetweenness)),
+    QuerySpec("graph_betweenness_volume", E.graphBetweennessVolume, Sql(EO.graphBetweennessVolume)),
     // temporal warehouse maintenance: SCD2 validity ranges, interval algebra
-    "scd2_history"      -> (E.scd2History(_, _)),
-    "scd2_merge"        -> (E.scd2Merge(_, _)),
-    "scd2_lookup"       -> (E.scd2Lookup(_, _)),
-    "events_anomaly"    -> (E.eventsAnomaly(_, _)),
-    "events_retention"  -> (E.eventsRetention(_, _)),
-    "events_retention_weekly" -> (E.eventsRetentionWeekly(_, _)),
-    "events_stickiness" -> (E.eventsStickiness(_, _)),
-    "events_changepoint" -> (E.eventsChangepoint(_, _)),
-    "interval_merge"    -> (E.intervalMerge(_, _)),
-    "interval_join"     -> (E.intervalJoin(_, _)),
-    "dq_drift"          -> (E.dqDrift(_, _)),
-    "cdc_apply"         -> (E.cdcApply(_, _)),
-    "cdc_apply_stored"  -> (E.cdcApplyStored(_, _)),
-    "cdc_compact_rewrite" -> (E.cdcCompactRewrite(_, _)),
-    "cdc_time_travel"   -> (E.cdcTimeTravel(_, _)),
-    "layout_compact_stored" -> (E.layoutCompactStored(_, _)),
-    "layout_zonemap_stored" -> (E.layoutZonemapStored(_, _)),
-    "index_inverted_stored" -> (E.indexInvertedStored(_, _)),
-    "index_bm25_probe"  -> (E.indexBm25Probe(_, _)),
-    "index_phrase_probe" -> (E.indexPhraseProbe(_, _)),
-    "index_bm25_phrase" -> (E.indexBm25Phrase(_, _)),
-    "index_inverted_delta" -> (E.indexInvertedDelta(_, _)),
-    "index_trgm_probe"  -> (E.indexTrgmProbe(_, _)),
-    "dq_expectations"   -> (E.dqExpectations(_, _)),
-    "emb_knn_graph"     -> (E.embKnnGraph(_, _)),
-    "emb_mmr"           -> (E.embMmr(_, _)),
-    "emb_pca_power"     -> (E.embPcaPower(_, _)),
-    "emb_trunc_recall"  -> (E.embTruncRecall(_, _)),
+    QuerySpec("scd2_history", E.scd2History, Sql(EO.scd2History)),
+    // shared with the full rebuild — merge ≡ rebuild is the gate
+    QuerySpec("scd2_merge", E.scd2Merge, Sql(EO.scd2History)),
+    QuerySpec("scd2_lookup", E.scd2Lookup, Sql(EO.scd2Lookup)),
+    QuerySpec("events_anomaly", E.eventsAnomaly, Sql(EO.eventsAnomaly)),
+    QuerySpec("events_retention", E.eventsRetention, Sql(EO.eventsRetention)),
+    QuerySpec("events_retention_weekly", E.eventsRetentionWeekly, Sql(EO.eventsRetentionWeekly)),
+    QuerySpec("events_stickiness", E.eventsStickiness, Sql(EO.eventsStickiness)),
+    QuerySpec("events_changepoint", E.eventsChangepoint, Sql(EO.eventsChangepoint)),
+    QuerySpec("interval_merge", E.intervalMerge, Sql(EO.intervalMerge)),
+    QuerySpec("interval_join", E.intervalJoin, Sql(EO.intervalJoin)),
+    QuerySpec("dq_drift", E.dqDrift, Sql(EO.dqDrift)),
+    QuerySpec("cdc_apply", E.cdcApply, Sql(EO.cdcApply)),
+    QuerySpec("cdc_apply_stored", E.cdcApplyStored, Sql(EO.cdcApplyStored)),
+    // shared with merge-on-read — the compacted rewrite ≡ merged read is the gate
+    QuerySpec("cdc_compact_rewrite", E.cdcCompactRewrite, Sql(EO.cdcApplyStored)),
+    QuerySpec("cdc_time_travel", E.cdcTimeTravel, Sql(EO.cdcTimeTravel)),
+    QuerySpec("layout_compact_stored", E.layoutCompactStored, Sql(EO.layoutCompactStored)),
+    QuerySpec("layout_zonemap_stored", E.layoutZonemapStored, Sql(EO.layoutZonemapStored)),
+    QuerySpec("index_inverted_stored", E.indexInvertedStored, Sql(EO.indexInvertedStored)),
+    QuerySpec("index_bm25_probe", E.indexBm25Probe, Sql(EO.indexBm25Probe)),
+    QuerySpec("index_phrase_probe", E.indexPhraseProbe, Sql(EO.indexPhraseProbe)),
+    QuerySpec("index_bm25_phrase", E.indexBm25Phrase, Sql(EO.indexBm25Phrase)),
+    // shared with the full-index probe — merge-on-read ≡ full is the gate
+    QuerySpec("index_inverted_delta", E.indexInvertedDelta, Sql(EO.indexInvertedStored)),
+    QuerySpec("index_trgm_probe", E.indexTrgmProbe, Sql(EO.indexTrgmProbe)),
+    QuerySpec("dq_expectations", E.dqExpectations, Sql(EO.dqExpectations)),
+    QuerySpec("emb_knn_graph", E.embKnnGraph, Sql(EO.embKnnGraph)),
+    QuerySpec("emb_mmr", E.embMmr, Sql(EO.embMmr)),
+    QuerySpec("emb_pca_power", E.embPcaPower, Sql(EO.embPcaPower)),
+    QuerySpec("emb_trunc_recall", E.embTruncRecall, Sql(EO.embTruncRecall)),
     // §2.7 streaming operators, drained to deterministic batch shapes
-    "stream_session"    -> (SQ.streamSession(_, _)),
-    "stream_session_native" -> (SQ.streamSessionNative(_, _)),
-    "stream_dedup"      -> (SQ.streamDedup(_, _)),
-    "stream_join"       -> (SQ.streamJoin(_, _)),
-    "stream_join_outer" -> (SQ.streamJoinOuter(_, _)),
-    "stream_window"     -> (SQ.streamWindow(_, _)),
-    "stream_retention"  -> (SQ.streamRetention(_, _)),
-    "stream_changepoint" -> (SQ.streamChangepoint(_, _)),
-    "stream_drift"      -> (SQ.streamDrift(_, _)),
-    "stream_window_append" -> (SQ.streamWindowAppend(_, _)),
-    "stream_funnel"     -> (SQ.streamFunnel(_, _)),
-    "stream_topk"       -> (SQ.streamTopK(_, _)),
-    "stream_asof"       -> (SQ.streamAsof(_, _)),
-    "stream_interval"   -> (SQ.streamInterval(_, _)),
-    "stream_decontam"   -> (SQ.streamDecontam(_, _)),
-    "stream_minhash"    -> (SQ.streamMinhash(_, _)),
-    "stream_cdc"        -> (SQ.streamCdc(_, _)),
-    "stream_scd"        -> (SQ.streamScd(_, _)),
-    "stream_hll_daily"  -> (SQ.streamHllDaily(_, _)),
-    "stream_curate"     -> (SQ.streamCurate(_, _)),
-    "stream_classify"   -> (SQ.streamClassify(_, _)),
+    QuerySpec("stream_session", SQ.streamSession, Sql(SO.streamSession)),
+    QuerySpec("stream_session_native", SQ.streamSessionNative, Sql(SO.streamSessionNative)),
+    QuerySpec("stream_dedup", SQ.streamDedup, Sql(SO.streamDedup)),
+    QuerySpec("stream_join", SQ.streamJoin, Sql(SO.streamJoin)),
+    QuerySpec("stream_join_outer", SQ.streamJoinOuter, Sql(SO.streamJoinOuter)),
+    QuerySpec("stream_window", SQ.streamWindow, Sql(SO.streamWindow)),
+    // shared with the batch twin — drain ≡ batch is the gate
+    QuerySpec("stream_retention", SQ.streamRetention, Sql(EO.eventsRetention)),
+    // shared with the batch twin — drain ≡ batch is the gate
+    QuerySpec("stream_changepoint", SQ.streamChangepoint, Sql(EO.eventsChangepoint)),
+    // shared with the batch twin — drain ≡ batch is the gate
+    QuerySpec("stream_drift", SQ.streamDrift, Sql(EO.dqDrift)),
+    QuerySpec("stream_window_append", SQ.streamWindowAppend, Sql(SO.streamWindowAppend)),
+    QuerySpec("stream_funnel", SQ.streamFunnel, Sql(SO.streamFunnel)),
+    QuerySpec("stream_topk", SQ.streamTopK, Sql(SO.streamTopK)),
+    QuerySpec("stream_asof", SQ.streamAsof, Sql(SO.streamAsof)),
+    QuerySpec("stream_interval", SQ.streamInterval, Sql(SO.streamInterval)),
+    QuerySpec("stream_decontam", SQ.streamDecontam, Sql(SO.streamDecontam)),
+    QuerySpec("stream_minhash", SQ.streamMinhash, Sql(SO.streamMinhash)),
+    // shared with the batch twin — drain ≡ batch is the gate
+    QuerySpec("stream_cdc", SQ.streamCdc, Sql(EO.cdcApply)),
+    QuerySpec("stream_scd", SQ.streamScd, Sql(SO.streamScd)),
+    QuerySpec("stream_hll_daily", SQ.streamHllDaily, Sql(SO.streamHllDaily)),
+    QuerySpec("stream_curate", SQ.streamCurate, Sql(SO.streamCurate)),
+    // shared with the batch twin — drain ≡ batch is the gate
+    QuerySpec("stream_classify", SQ.streamClassify, Sql(EO.embClassify)),
   )
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_derived_key"    -> O.q1DerivedKey,
-    "q2_anti_join"      -> O.q2AntiJoin,
-    "q3_dim_join"       -> O.q3DimJoin,
-    "q4_scalar_subquery" -> O.q4ScalarSubquery,
-    "q5_groupby_agg"    -> O.q5GroupbyAgg,
-    "q6_distinct"       -> O.q6Distinct,
-    "q6b_distinct_values" -> O.q6bDistinctValues,
-    "q7_rollup"         -> O.q7Rollup,
-    "q8_approx_distinct" -> O.q8ApproxDistinct,
-    "q9_window_rank"    -> O.q9WindowRank,
-    "q10_window_frame"  -> O.q10WindowFrame,
-    "q11_topk"          -> O.q11TopK,
-    "q12_setops"        -> O.q12SetOps,
-    "q13_semi_join"     -> O.q13SemiJoin,
-    "q14_range_join"    -> O.q14RangeJoin,
-    "q15_phone_regex"   -> O.q15PhoneRegex,
-    "q16_date_json"     -> O.q16DateJson,
-    "q17_cross_join"    -> O.q17CrossJoin,
-    "q18_tumbling_day"  -> O.q18TumblingDay,
-    "q19_grouping_sets" -> O.q19GroupingSets,
-    "q20_cosine_topk"   -> O.q20CosineTopk,
-    "q21_array_ops"     -> O.q21ArrayOps,
-    "q22_asof_join"     -> O.q22AsofJoin,
-    "q23_sessionize"    -> O.q23Sessionize,
-    "q24_percentiles"   -> O.q24Percentiles,
-    "q24b_approx_percentiles" -> O.q24bApproxPercentiles,
-    "q25_topk_agg"      -> O.q25TopkAgg,
-    "q26_cube"          -> O.q26Cube,
-    "q27_pivot"         -> O.q27Pivot,
-    "q27b_unpivot"      -> O.q27bUnpivot,
-    "q28_window_nav"    -> O.q28WindowNav,
-    "q29_funnel"        -> O.q29Funnel,
-    "q30_full_outer"    -> O.q30FullOuter,
-    "q31_correlated"    -> O.q31Correlated,
-    "q32_recursive"     -> O.q32Recursive,
-    "q33_graph_walk"    -> O.q33GraphWalk,
-    "q34_range_frame"   -> O.q34RangeFrame,
-    "q35_window_distinct" -> O.q35WindowDistinct,
-    "q36_ntile"         -> O.q36Ntile,
-    "q37_gap_fill"      -> O.q37GapFill,
-    // deterministic extension ops; sketch/LSH ops are rows-only
-    "dedup_exact"       -> EO.dedupExact,
-    "dedup_url"         -> EO.dedupUrl,
-    "domain_quota"      -> EO.domainQuota,
-    "dedup_substring"   -> EO.dedupSubstring,
-    "text_ngrams"       -> EO.textNgrams,
-    "text_pmi"          -> EO.textPmi,
-    "text_heavy_hitters" -> EO.textHeavyHitters,
-    "events_hll_daily"  -> EO.eventsHllDaily,
-    "dedup_jaccard"     -> EO.dedupJaccard,
-    "dedup_containment" -> EO.dedupContainment,
-    "dedup_jaccard_char" -> EO.dedupJaccardChar,
-    "dedup_minhash"     -> EO.dedupMinhash,
-    "dedup_minhash_clusters" -> EO.dedupMinhashClusters,
-    "corpus_overlap"    -> EO.corpusOverlap,
-    "dedup_simhash"     -> EO.dedupSimhash,
-    "dedup_embedding"   -> EO.dedupEmbedding,
-    "dedup_minhash_verify" -> EO.dedupMinhashVerify,
-    "corpus_incremental" -> EO.corpusIncremental,
-    "dedup_semantic"    -> EO.dedupSemantic,
-    "ann_lsh_topk"      -> EO.annExactTop10,
-    "ann_ivf_topk"      -> EO.annExactTop10,
-    "ann_ivf_kmeans"    -> EO.annExactTop10,
-    // shared VERBATIM with the exact twin — merge-on-read freshness gate
-    "ann_ivf_delta"     -> EO.annExactTop10,
-    "ann_ivfpq_topk"    -> EO.annExactTop10,
-    "ann_filtered"      -> EO.annFilteredExact,
-    "ann_q8_topk"       -> EO.annQ8,
-    "ann_q8_range"      -> EO.annQ8Range,
-    "corpus_split"      -> EO.corpusSplit,
-    "corpus_sample"     -> EO.corpusSample,
-    "corpus_reservoir"  -> EO.corpusReservoir,
-    "corpus_leakage"    -> EO.corpusLeakage,
-    "corpus_pack"       -> EO.corpusPack,
-    "corpus_interleave" -> EO.corpusInterleave,
-    "corpus_mix"        -> EO.corpusMix,
-    "corpus_decontam"   -> EO.corpusDecontam,
-    // the Bloom prefilter is exact-preserving, so the bloom path must
-    // match the SAME oracle SQL bit for bit — sharing the string keeps
-    // the two paths from drifting apart
-    "corpus_decontam_bloom" -> EO.corpusDecontam,
-    "corpus_chunk"      -> EO.corpusChunk,
-    "corpus_offsets"    -> EO.corpusOffsets,
-    "corpus_shard"      -> EO.corpusShard,
-    "corpus_token_budget" -> EO.corpusTokenBudget,
-    "corpus_hist"       -> EO.corpusHist,
-    "corpus_stats"      -> EO.corpusStats,
-    "layout_zorder"     -> EO.layoutZorder,
-    "layout_hilbert"    -> EO.layoutHilbert,
-    "layout_hilbert_stored" -> EO.layoutHilbertStored,
-    "layout_zorder_stored" -> EO.layoutZorderStored,
-    "line_dedup"        -> EO.lineDedup,
-    "corpus_curate"     -> EO.corpusCurate,
-    "corpus_curate2"    -> EO.corpusCurate2,
-    "corpus_curate3"    -> EO.corpusCurate3,
-    "corpus_curate4"    -> EO.corpusCurate4,
-    "emb_quantize"      -> EO.embQuantize,
-    "emb_centroid"      -> EO.embCentroid,
-    "emb_classify"      -> EO.embClassify,
-    "text_tokens"       -> EO.textTokens,
-    "text_langid"       -> EO.textLangid,
-    "text_tfidf"        -> EO.textTfidf,
-    "text_bm25"         -> EO.textBm25,
-    "retrieve_hybrid"   -> EO.retrieveHybrid,
-    "emb_hard_negatives" -> EO.embHardNegatives,
-    "text_redact"       -> EO.textRedact,
-    "text_repetition"   -> EO.textRepetition,
-    "text_familiarity"  -> EO.textFamiliarity,
-    "text_lm_bigram"    -> EO.textLmBigram,
-    "text_lm_trigram"   -> EO.textLmTrigram,
-    "text_script"       -> EO.textScript,
-    "text_gopher"       -> EO.textGopher,
-    "text_winnow"       -> EO.textWinnow,
-    "url_filter"        -> EO.urlFilter,
-    "url_robots"        -> EO.urlRobots,
-    "text_quality"      -> EO.textQuality,
-    "mm_bytes"          -> EO.mmBytes,
-    "mm_decode"         -> EO.mmDecode,
-    "mm_frames"         -> EO.mmFrames,
-    "mm_resize"         -> EO.mmResize,
-    "mm_audio"          -> EO.mmAudio,
-    "mm_pcm"            -> EO.mmPcm,
-    "mm_video"          -> EO.mmVideo,
-    "mm_video_frames"   -> EO.mmVideoFrames,
-    "mm_video_sample"   -> EO.mmVideoSample,
-    "mm_video_dedup"    -> EO.mmVideoDedup,
-    "mm_video_phash"    -> EO.mmVideoPhash,
-    "mm_video_scene"    -> EO.mmVideoScene,
-    "mm_audio_scene"    -> EO.mmAudioScene,
-    "mm_audio_dedup"    -> EO.mmAudioDedup,
-    "mm_audio_fp"       -> EO.mmAudioFp,
-    "mm_audio_neardup"  -> EO.mmAudioNeardup,
-    "mm_image_dedup"    -> EO.mmImageDedup,
-    "mm_image_phash"    -> EO.mmImagePhash,
-    "mm_image_neardup"  -> EO.mmImageNeardup,
-    "mm_census"         -> EO.mmCensus,
-    "mm_curate"         -> EO.mmCurate,
-    "skew_join"         -> EO.skewJoin,
-    "bucketed_join"     -> EO.bucketedJoin,
-    "graph_pagerank"    -> EO.graphPagerank,
-    "graph_hits"        -> EO.graphHits,
-    "graph_modularity"  -> EO.graphModularity,
-    "graph_conductance" -> EO.graphConductance,
-    "graph_modularity_volume" -> EO.graphModularityVolume,
-    "graph_hits_volume" -> EO.graphHitsVolume,
-    "graph_pagerank_wide" -> EO.graphPagerank,
-    "graph_pagerank_weighted" -> EO.graphPagerankWeighted,
-    "graph_pagerank_volume" -> EO.graphPagerankVolume,
-    "graph_ppr_volume"  -> EO.graphPprVolume,
-    "graph_pagerank_weighted_volume" -> EO.graphPagerankWeightedVolume,
-    "graph_cc_volume"   -> EO.graphCcVolume,
-    "graph_sssp_volume" -> EO.graphSsspVolume,
-    "graph_ppr"         -> EO.graphPpr,
-    "graph_cc"          -> EO.graphCc,
-    "graph_scc"         -> EO.graphScc,
-    "graph_scc_volume"  -> EO.graphSccVolume,
-    "graph_kcore_volume" -> EO.graphKcoreVolume,
-    "graph_lpa_volume"  -> EO.graphLpaVolume,
-    "graph_triangles_volume" -> EO.graphTrianglesVolume,
-    "graph_sssp"        -> EO.graphSssp,
-    "graph_reciprocity" -> EO.graphReciprocity,
-    "corpus_novelty"    -> EO.corpusNovelty,
-    "corpus_dup_hist"   -> EO.corpusDupHist,
-    "graph_harmonic"    -> EO.graphHarmonic,
-    "graph_harmonic_hll" -> EO.graphHarmonicHll,
-    "graph_nf"          -> EO.graphNf,
-    "graph_nf_hll"      -> EO.graphNfHll,
-    "graph_triangles"   -> EO.graphTriangles,
-    "graph_clustering"  -> EO.graphClustering,
-    "graph_linkpred"    -> EO.graphLinkpred,
-    "graph_linkpred_volume" -> EO.graphLinkpredVolume,
-    "graph_kcore"       -> EO.graphKcore,
-    "graph_lpa"         -> EO.graphLpa,
-    "graph_coaccess"    -> EO.graphCoaccess,
-    "graph_betweenness" -> EO.graphBetweenness,
-    "graph_betweenness_volume" -> EO.graphBetweennessVolume,
-    "scd2_history"      -> EO.scd2History,
-    // shared VERBATIM with the full rebuild — merge ≡ rebuild is the gate
-    "scd2_merge"        -> EO.scd2History,
-    "scd2_lookup"       -> EO.scd2Lookup,
-    "events_anomaly"    -> EO.eventsAnomaly,
-    "events_retention"  -> EO.eventsRetention,
-    "events_retention_weekly" -> EO.eventsRetentionWeekly,
-    "events_stickiness" -> EO.eventsStickiness,
-    "events_changepoint" -> EO.eventsChangepoint,
-    "interval_merge"    -> EO.intervalMerge,
-    "interval_join"     -> EO.intervalJoin,
-    "dq_drift"          -> EO.dqDrift,
-    "cdc_apply"         -> EO.cdcApply,
-    "cdc_apply_stored"  -> EO.cdcApplyStored,
-    "cdc_compact_rewrite" -> EO.cdcApplyStored,
-    "cdc_time_travel"   -> EO.cdcTimeTravel,
-    "layout_compact_stored" -> EO.layoutCompactStored,
-    "layout_zonemap_stored" -> EO.layoutZonemapStored,
-    "index_inverted_stored" -> EO.indexInvertedStored,
-    "index_bm25_probe"  -> EO.indexBm25Probe,
-    "index_phrase_probe" -> EO.indexPhraseProbe,
-    "index_bm25_phrase" -> EO.indexBm25Phrase,
-    // shared VERBATIM with the full-index probe — merge-on-read ≡ full is the gate
-    "index_inverted_delta" -> EO.indexInvertedStored,
-    "index_trgm_probe"  -> EO.indexTrgmProbe,
-    "dq_expectations"   -> EO.dqExpectations,
-    "emb_knn_graph"     -> EO.embKnnGraph,
-    "emb_mmr"           -> EO.embMmr,
-    "emb_pca_power"     -> EO.embPcaPower,
-    "emb_trunc_recall"  -> EO.embTruncRecall,
-    "stream_asof"       -> SO.streamAsof,
-    "stream_interval"   -> SO.streamInterval,
-    "stream_session"    -> SO.streamSession,
-    "stream_session_native" -> SO.streamSessionNative,
-    "stream_dedup"      -> SO.streamDedup,
-    "stream_join"       -> SO.streamJoin,
-    "stream_join_outer" -> SO.streamJoinOuter,
-    "stream_window"     -> SO.streamWindow,
-    // shared VERBATIM with the batch twin — drain ≡ batch is the gate
-    "stream_retention"  -> EO.eventsRetention,
-    // shared VERBATIM with the batch twin — drain ≡ batch is the gate
-    "stream_changepoint" -> EO.eventsChangepoint,
-    "stream_drift"      -> EO.dqDrift,
-    "stream_window_append" -> SO.streamWindowAppend,
-    "stream_funnel"     -> SO.streamFunnel,
-    "stream_topk"       -> SO.streamTopK,
-    "stream_decontam"   -> SO.streamDecontam,
-    "stream_minhash"    -> SO.streamMinhash,
-    "stream_cdc"        -> EO.cdcApply,
-    "stream_scd"        -> SO.streamScd,
-    "stream_hll_daily"  -> SO.streamHllDaily,
-    "stream_curate"     -> SO.streamCurate,
-    "stream_classify"   -> EO.embClassify,
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.build).toMap
+
+  val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, Sql(text)) => name -> text }.toMap
+
+  /** The specs named by a dev subset argument, in declaration order;
+    * an unknown name fails with every bad name listed. */
+  def resolve(names: Seq[String]): Seq[QuerySpec] = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    specs.filter(s => names.contains(s.name))
+  }
 }

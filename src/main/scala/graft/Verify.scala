@@ -1,25 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Args: sfDir outDir [name,name,...]. The optional third argument is
+  * dev-only: it dumps just those queries and writes just their oracles.
+  * The driver always passes two arguments.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg (dev only): comma-separated query names to dump —
-    // the driver always passes two args, so its run is unaffected
-    val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [name,name,...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val only: String => Boolean =
+      if (args.length > 2) SparkEntry.resolve(args(2).split(",").toSeq).map(_.name).toSet
+      else _ => true
+    val spark = graft.core.Sessions.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => only.forall(_.contains(q._1))).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => only(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -27,8 +25,8 @@ object Verify {
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in oracle SQL would otherwise make the driver's
+    // json.load fail and silently zero the correctness gate.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -38,7 +36,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(o => only(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

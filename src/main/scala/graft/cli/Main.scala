@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import graft.core.Sessions
 import graft.etl.Pipeline
 import graft.sources.Ingest
 
@@ -24,18 +25,6 @@ import graft.sources.Ingest
   * production [[Ingest.PageFetcher]] slots in without CLI changes.
   */
 object Main {
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private val usage =
     """usage: ingest <cities.txt> <categories.txt> <fixtureDir> <outDir> [scrapeDate]
@@ -187,7 +176,7 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = Sessions.local()
     try run(args.toList, spark)
     catch {
       case e: IllegalArgumentException =>

@@ -17,13 +17,10 @@ import graft.streaming.{IntervalStream, SessionStream, StreamDedup, StreamJoin}
 object StreamingQueries {
 
   /** The streaming file source wants a directory of one table's files;
-    * the sf dirs mix ten schemas — stage `copies` links of
-    * events.parquet alone. Multiple copies make duplicates arrive in
-    * DIFFERENT micro-batches (maxFilesPerTrigger=1 in StreamDedup), so
-    * cross-batch dedup state is genuinely exercised. */
-  private def stageEvents(dir: String, copies: Int): String =
-    stageTable(dir, "events", copies)
-
+    * the sf dirs mix ten schemas — stage `copies` copies of one table's
+    * parquet alone. Multiple copies make duplicates arrive in DIFFERENT
+    * micro-batches (maxFilesPerTrigger=1 in StreamDedup), so cross-batch
+    * dedup state is genuinely exercised. */
   private def stageTable(dir: String, table: String, copies: Int): String = {
     val staged = Files.createTempDirectory("graft_stream_q")
     (1 to copies).foreach { i =>

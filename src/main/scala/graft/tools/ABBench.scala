@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev-only: interleaved A/B of a code-path toggle in ONE session —
   * arm A ([[AB.on]] = true) and arm B (false) alternate per pass, so
-  * host drift hits both arms equally (plain back-to-back SubBench
-  * sessions measured ±30% session drift on this host — useless for
-  * deciding a 10-20% effect). Wire the experiment's two paths on
-  * `graft.tools.AB.on` temporarily, run this, then commit ONE path and
-  * drop the toggle. Args: name [name ...] [/abs/sfDir]; AB_PASSES
+  * host drift hits both arms equally (back-to-back `graft.Bench`
+  * subset sessions measured ±30% session drift on a shared host —
+  * useless for deciding a 10-20% effect). Wire the experiment's two
+  * paths on `graft.tools.AB.on` temporarily, run this, then commit ONE
+  * path and drop the toggle. Args: name [name ...] [/abs/sfDir]; AB_PASSES
   * pairs (default 3). Prints per-query min and per-pass times for
   * both arms. */
 object AB { @volatile var on: Boolean = false }
@@ -17,13 +17,7 @@ object ABBench {
   def main(args: Array[String]): Unit = {
     val (dirs, names) = args.toSeq.partition(_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     def timeOnce(n: String): Double = {

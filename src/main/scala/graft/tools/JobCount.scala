@@ -3,7 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.core.Sessions
 
 /** Dev-only: run a declared query (noop sink, after one warmup run)
   * and print scheduler counters — jobs, stages, tasks, summed task
@@ -13,13 +14,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val (dirs, names) = args.toSeq.partition(_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -2,27 +2,21 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev-only: write each named query's `.explain("formatted")` to
-  * plans/r22/<name>_<tag>.txt — the judge-facing plan evidence.
+  * plans/r22/<name>_<tag>.txt as plan evidence for a change.
   * Args: tag name [name ...] [/abs/sfDir]. For checkpoint-loop
   * operators the final plan is a scan over the materialized loop
-  * output; the per-iteration shape is documented via scheduler
-  * counters (tools/JobCount) in OPTIMIZATION_r21.md. */
+  * output; the per-iteration shape shows in PlanDumpStep and in the
+  * scheduler counters of JobCount. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (dirs, rest) = args.toSeq.partition(_.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
     val tag = rest.head
     val names = rest.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     Files.createDirectories(Paths.get("plans/r22"))
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev-only: run named queries while capturing each BSP loop
   * iteration's PRE-checkpoint frame (graft.core.BspLoop.stepSink) and
@@ -23,13 +23,7 @@ object PlanDumpStep {
     val tag = rest.head
     val stepK = rest(1).toInt
     val names = rest.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     Files.createDirectories(Paths.get("plans/r22"))
     for (n <- names) {
       val plans = scala.collection.mutable.Map.empty[(String, Int), String]

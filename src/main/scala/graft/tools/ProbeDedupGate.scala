@@ -3,10 +3,11 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Sessions
 import graft.core.Tables.t
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Dedup
 
-/** Dev probe for the dedup oracle gates (round 19): at each SF, does
+/** Dev probe for the dedup oracle gates: at each SF, does
   * each LSH discovery path's VERIFIED pair set equal the exhaustive
   * truth set its DuckDB oracle will compute? Run before declaring the
   * gated queries — a missed borderline pair here means the gate would
@@ -28,10 +29,7 @@ object ProbeDedupGate {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
       val truth = truthPairs(spark, dir, 0.5)

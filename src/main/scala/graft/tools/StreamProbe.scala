@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev-only: drain one streaming operator and dump per-micro-batch
   * progress (durationMs breakdown) to see where drain wall-time goes.
@@ -12,13 +12,8 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val parts = if (args.length > 1) args(1) else "8"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
 
     def drainOnce(label: String): Unit = {
       val staged = Files.createTempDirectory("graft_probe")
@@ -28,7 +23,7 @@ object StreamProbe {
       val q = graft.streaming.StreamJoin.attributionJoinOuter(spark, staged.toString, s"probe_$label")
       q.awaitTermination()
       val total = (System.nanoTime() - t0) / 1e9
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+      spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
       println(f"== $label parts=$parts total=$total%.2fs batches=${q.recentProgress.length}")
       q.recentProgress.foreach { p =>
         println(s"  batch=${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}")

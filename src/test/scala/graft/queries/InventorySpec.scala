@@ -2,7 +2,8 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{QuerySpec, SparkEntry, SparkSpec}
+import graft.QuerySpec.{RowsOnly, Sql}
 
 class InventorySpec extends AnyFunSuite with SparkSpec {
 
@@ -20,6 +21,39 @@ class InventorySpec extends AnyFunSuite with SparkSpec {
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
+  }
+
+  test("the rows-only floor is exactly the five declared queries, each with a reason") {
+    val rowsOnly = SparkEntry.specs.collect { case QuerySpec(n, _, RowsOnly(r)) => n -> r }.toMap
+    assert(rowsOnly.keySet == Set("ann_ivf_stored", "ann_knn_join", "bpe_tokens",
+      "text_compress", "text_fingerprint"))
+    assert(rowsOnly.values.forall(_.nonEmpty))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet -- rowsOnly.keySet)
+  }
+
+  test("a name declared twice fails registry construction") {
+    val build = SparkEntry.queries("q5_groupby_agg")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registry(QuerySpec("twice", build, Sql("SELECT 1")),
+        QuerySpec("twice", build, RowsOnly("duplicate")))
+    }
+    assert(e.getMessage.contains("twice"))
+  }
+
+  test("resolve returns the named specs and rejects unknown names, listing each") {
+    assert(SparkEntry.resolve(Seq("graph_cc", "q5_groupby_agg")).map(_.name).toSet ==
+      Set("graph_cc", "q5_groupby_agg"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.resolve(Seq("q5_groupby_agg", "no_such_query", "graph_ccc"))
+    }
+    assert(e.getMessage.contains("no_such_query") && e.getMessage.contains("graph_ccc"))
+    assert(!e.getMessage.contains("q5_groupby_agg"))
+  }
+
+  test("the shared session runs on Sessions.local settings: UTC, 4 partitions, no UI") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
   test("q8 approx distinct: err_gate 0 (sketch within 5%), exact count matches") {
